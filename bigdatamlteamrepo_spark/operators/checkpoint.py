@@ -1,21 +1,27 @@
-"""Lineage truncation for iterative DataFrame loops, with a
-fault-tolerance knob.
+"""The engine's one lineage-cut primitive.
 
-Multi-round graph/label loops (LPA, k-core peel, PageRank, star
-contraction) must truncate lineage every round or the logical plan
-doubles per iteration (driver OOMs building plan strings long before
-the data is big).  ``localCheckpoint`` does that with executor-local
-storage — fine on one machine, but at cluster scale a SINGLE lost
-executor invalidates its blocks and fails the whole multi-round job,
-because the truncated lineage can no longer be replayed.
+Every place the engine materializes a frame and severs its lineage —
+an iterative loop's round state (LPA, k-core peel, PageRank, star
+contraction), a frame several consumers read (band tables, shingle
+sets, verified pair lists), a pipeline stage's survivors — goes
+through :func:`truncate`; no other module calls
+``DataFrame.localCheckpoint`` or ``DataFrame.checkpoint`` (pinned by
+``tests/test_lineage_cuts.py``).  The storage policy therefore lives
+here and nowhere else:
 
-:func:`truncate` is the knob: when the caller has configured a
-reliable checkpoint directory (``spark.sparkContext.setCheckpointDir``
-— HDFS/S3 in production), rounds checkpoint THERE and survive executor
-loss; otherwise the executor-local fast path is kept.  Results are
-identical under both modes (pinned in ``tests/test_graphs.py``) — only
-the storage and fault story differ, so local mode stays the default
-for bench/driver runs and a cluster deployment opts in with one line.
+* with a reliable checkpoint directory configured
+  (``spark.sparkContext.setCheckpointDir`` — HDFS/S3 in production),
+  every cut writes THERE and survives executor loss;
+* otherwise every cut is an executor-local ``localCheckpoint`` — fine
+  on one machine, but at cluster scale a single lost executor
+  invalidates its blocks, and a truncated lineage can no longer be
+  replayed.
+
+Results are identical under both modes (pinned in
+``tests/test_graph_convergence.py`` for the graph loops, the
+neardup summary and the corpus build); only the storage and fault
+story differ.  Local mode is the default, and a cluster deployment
+opts in with one ``setCheckpointDir`` line.
 """
 
 from __future__ import annotations
@@ -23,22 +29,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def checkpoint_dir_configured(df: DataFrame) -> bool:
-    """True when a reliable checkpoint directory is set on this
-    session's SparkContext."""
-    return df.sparkSession.sparkContext.getCheckpointDir() is not None
-
-
 def truncate(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize ``df`` and sever its lineage: reliable
     ``checkpoint`` when a checkpoint dir is configured, executor-local
-    ``localCheckpoint`` otherwise.  Eager by default — iterative loops
-    need the round's work done NOW, not replayed inside the next
-    round's plan.  ``eager=False`` (r13, guide §2.4) is for NON-loop
-    callers whose next action sequentially consumes the frame anyway
-    (e.g. the overlap join's auto-bin aggregate): the first job fills
-    the checkpoint and the dedicated materialization barrier
-    disappears; reuse semantics are unchanged."""
-    if checkpoint_dir_configured(df):
+    ``localCheckpoint`` otherwise.
+
+    ``eager=True`` runs a job now — loops need the round's work done
+    before the next round plans on it, and a frame whose first
+    consumers run concurrently (both sides of a self-join) must not be
+    computed once per consumer.  ``eager=False`` is for a frame whose
+    next action reads it sequentially anyway: that first job fills the
+    checkpoint, so the dedicated materialization barrier disappears
+    and reuse semantics are unchanged."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.functions.text import tokenize
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
 
 _WORD_BITS = 32
 
@@ -426,13 +427,12 @@ def embedding_neardup_pairs(
     # Materialize the (output-sized) pair frame, then release the two
     # intermediate caches — repeated invocations in one session (the
     # registry sweep, the semdedup capstone) must not accumulate
-    # executor storage.  localCheckpoint severs the lineage so the
+    # executor storage.  truncate severs the lineage so the
     # returned frame never re-reads normed/assigned.
-    out = (
+    out = truncate(
         core_pairs.unionByName(spill_core)
         .unionByName(spill_pairs)
         .filter(F.col("cosine_sim") >= threshold)
-        .localCheckpoint(eager=True)
     )
     assigned.unpersist()
     normed.unpersist()

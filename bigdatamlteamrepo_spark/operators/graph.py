@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
+
 
 def _closed_min(nbr: DataFrame) -> DataFrame:
     """m(u) = min(N(u) ∪ {u}) over a directed neighbor list (u, v)."""
@@ -84,7 +86,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 30,
-    checkpoint_every: int = 0,
     small_graph_edges: int = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """(node, component) for every node appearing in ``edges``, where
@@ -94,11 +95,11 @@ def connected_components(
     30 covers any realistic graph — exhaustion raises rather than
     returning partial labels.
 
-    Lineage is truncated EVERY round (localCheckpoint, or a reliable
-    ``checkpoint`` every ``checkpoint_every`` rounds when a checkpoint
-    dir is configured): without truncation the logical plan doubles per
-    iteration and the driver OOMs building plan strings long before the
-    data is large — the classic iterative-DataFrame trap.
+    Lineage is truncated EVERY round (``operators.checkpoint.truncate``,
+    which writes to a reliable checkpoint dir when one is configured):
+    without truncation the logical plan doubles per iteration and the
+    driver OOMs building plan strings long before the data is large —
+    the classic iterative-DataFrame trap.
 
     **Small-graph fast path**: when the canonical edge count is ≤
     ``small_graph_edges``, the whole computation runs as ONE union-find
@@ -119,16 +120,15 @@ def connected_components(
     # several times (symmetric neighbor union, min join, convergence
     # count) and the caller's upstream — e.g. an LSH-candidates +
     # Jaccard-verify pipeline — would otherwise be recomputed per
-    # reference (measured 23s → 6s for neardup_dedup_summary at sf0.1)
-    e = (
+    # reference (measured 23s → 6s for neardup_dedup_summary at sf0.1).
+    # LAZY: the count() below is the materializing action, so the
+    # upstream runs inside ONE job instead of eager-copy + count (r13)
+    e = truncate(
         edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .distinct()
-        # LAZY: the count() below is the materializing action, so the
-        # upstream (e.g. an LSH-candidates + Jaccard-verify pipeline)
-        # runs inside ONE job instead of eager-copy + count (r13 §2.4)
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     converged = False
     # carried across rounds so each round runs ONE count job, not two;
@@ -155,13 +155,13 @@ def connected_components(
         # checkpoint (r13): the caller's first action materializes the
         # labels; later references reuse them — the dedicated label-copy
         # barrier disappears.
-        return _local_components(e).localCheckpoint(eager=False)
+        return truncate(_local_components(e), eager=False)
 
     # track every vertex: isolated-after-contraction roots must survive.
     # Lazy (no cache): it derives from the checkpointed canonical edge
     # list and is referenced once, by the roots anti-join.
     nodes = e.select(F.col("u").alias("node")).union(e.select("v")).distinct()
-    for rnd in range(max_rounds):
+    for _ in range(max_rounds):
         # ---- large-star: (v > u) → m(u), over the SYMMETRIC neighbor list
         nbr = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         mins = _closed_min(nbr)
@@ -192,10 +192,7 @@ def connected_components(
             .select(F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v"))
             .distinct()
         )
-        if checkpoint_every and (rnd + 1) % checkpoint_every == 0:
-            e2 = e2.checkpoint()
-        else:
-            e2 = e2.localCheckpoint(eager=True)
+        e2 = truncate(e2)
         e1.unpersist()
 
         # both sets are distinct, so equal size + empty one-sided
@@ -222,4 +219,4 @@ def connected_components(
     # lazy checkpoint: callers may consume the label frame more than
     # once — the first action materializes it, later ones reuse it, and
     # every input here is already a checkpointed edge list
-    return out.localCheckpoint(eager=False)
+    return truncate(out, eager=False)

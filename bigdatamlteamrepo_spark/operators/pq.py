@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.functions.vectors import cosine_similarity, dot, l2_sq
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
 
 #: subspace count, dims per subspace (m · sub = embedding dim)
 PQ_M = 4
@@ -310,10 +311,9 @@ def ivfpq_topk(
     )
 
     books = pq_codebooks(emb, n_centroids, m, sub)
-    codes = (
+    codes = truncate(
         pq_encode(emb, books, m, sub)
         .join(assigned, "vec_id")
-        .localCheckpoint(eager=True)
     )
 
     qsim = cosine_similarity(F.col("q_emb"), F.col("a_emb"))
@@ -535,9 +535,7 @@ def semdedup_from_index(
     from bigdatamlteamrepo_spark.operators.graph import connected_components
 
     vecs = read_index_part(spark, index_dir, "vectors")
-    pairs = within_cell_cosine_pairs(vecs, threshold).localCheckpoint(
-        eager=True
-    )
+    pairs = truncate(within_cell_cosine_pairs(vecs, threshold))
     comp = connected_components(
         pairs.select("id_a", "id_b"), src="id_a", dst="id_b"
     )
@@ -576,11 +574,10 @@ def ivfpq_index_topk(
         ).alias("c_sim"),
     )
     wq = Window.partitionBy("query_id").orderBy(F.desc("c_sim"), F.asc("cell"))
-    probed = (
+    probed = truncate(  # reused for codes join + cell list
         qc.withColumn("p", F.row_number().over(wq))
         .filter(F.col("p") <= n_probe)
         .select("query_id", "cell")
-        .localCheckpoint(eager=True)  # reused for codes join + cell list
     )
     cells = sorted({r.cell for r in probed.select("cell").distinct().collect()})
 

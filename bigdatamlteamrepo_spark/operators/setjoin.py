@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
+
 
 #: τ is carried as the exact rational round(τ·1000)/1000 so prefix
 #: lengths and size pruning are integer arithmetic — float ceil(τ·n)
@@ -111,7 +113,7 @@ def prefix_jaccard_join(
         F.col(id_col).alias("id"), F.col(set_col).alias("s"), F.size(set_col).alias("size")
     )
     # materialize once: token df, prefix build, and verify all read it
-    base = base.localCheckpoint(eager=True)
+    base = truncate(base)
 
     tok = base.select("id", "size", F.explode("s").alias("t"))
     df_tok = tok.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
@@ -137,7 +139,7 @@ def prefix_jaccard_join(
     if max_candidates is not None:
         # materialize the prefix frame so the estimator pass and the
         # join read it once; the estimate itself is one tiny agg
-        prefix = prefix.localCheckpoint(eager=True)
+        prefix = truncate(prefix)
         est_row = (
             prefix.groupBy("t")
             .agg(F.count(F.lit(1)).alias("n"))

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.functions.vectors import cosine_similarity, dot
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
 
 
 def hyperplane_values(dim: int, plane: int, seed: int) -> list[float]:
@@ -355,12 +356,11 @@ def prefix_rerank_topk_from_layout(
     w1 = Window.partitionBy("query_id").orderBy(
         F.desc("pre_sim"), F.asc("vec_id")
     )
-    cand = (
+    cand = truncate(  # reused: id-list collect + join
         joined.select("query_id", "vec_id", pre_sim.alias("pre_sim"))
         .withColumn("r", F.row_number().over(w1))
         .filter(F.col("r") <= candidates)
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .localCheckpoint(eager=True)  # reused: id-list collect + join
     )
     ids = [r.neighbor_id for r in cand.select("neighbor_id").distinct().collect()]
 

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.catalog import load_table
+from bigdatamlteamrepo_spark.operators import checkpoint
 
 
 def build_training_corpus(
@@ -133,7 +134,7 @@ def build_training_corpus(
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    s2 = s1.join(exact_keep, "doc_id", "left_semi").localCheckpoint(eager=True)
+    s2 = checkpoint.truncate(s1.join(exact_keep, "doc_id", "left_semi"))
 
     # ---- stage 3: near-dup dedup — keep each cluster's min id.
     # Pairs come from the registered LSH→verify plan over the full
@@ -158,9 +159,11 @@ def build_training_corpus(
     )
     # survive iff not in any near-dup cluster, or the cluster's
     # surviving representative
-    s3 = s2.join(clustered, "doc_id", "left_anti").unionByName(
-        s2.join(reps, "doc_id", "left_semi")
-    ).localCheckpoint(eager=True)
+    s3 = checkpoint.truncate(
+        s2.join(clustered, "doc_id", "left_anti").unionByName(
+            s2.join(reps, "doc_id", "left_semi")
+        )
+    )
 
     # ---- stage 3.25 (optional): exact-substring span cutting — the
     # ExactSubstr pass (Lee et al.): repeated ≥15-token spans among the
@@ -179,9 +182,9 @@ def build_training_corpus(
         )
 
         spans = dup_substring_spans(s3)
-        s3cut = apply_span_cuts(s3, spans).drop(
-            "n_tokens_cut"
-        ).localCheckpoint(eager=True)
+        s3cut = checkpoint.truncate(
+            apply_span_cuts(s3, spans).drop("n_tokens_cut")
+        )
     else:
         s3cut = s3
 
@@ -205,9 +208,9 @@ def build_training_corpus(
                 surgical_decontaminate,
             )
 
-            s35 = surgical_decontaminate(s3cut, ev_grams).drop(
-                "n_tokens_cut"
-            ).localCheckpoint(eager=True)
+            s35 = checkpoint.truncate(
+                surgical_decontaminate(s3cut, ev_grams).drop("n_tokens_cut")
+            )
         elif decon_mode == "drop":
             contaminated = (
                 s3cut.select("doc_id", F.explode(shingles(tokenize("text"), _DECON_W)).alias("gram"))
@@ -215,8 +218,8 @@ def build_training_corpus(
                 .select("doc_id")
                 .distinct()
             )
-            s35 = s3cut.join(contaminated, "doc_id", "left_anti").localCheckpoint(
-                eager=True
+            s35 = checkpoint.truncate(
+                s3cut.join(contaminated, "doc_id", "left_anti")
             )
         else:
             raise ValueError(f"decon_mode must be 'drop' or 'cut': {decon_mode!r}")
@@ -250,9 +253,9 @@ def build_training_corpus(
             q_keep = select_top_fraction(
                 scores, "quality_prob", quality_top_frac, approx=quality_approx
             )
-        s375 = s35.join(
-            q_keep.select("doc_id"), "doc_id", "left_semi"
-        ).localCheckpoint(eager=True)
+        s375 = checkpoint.truncate(
+            s35.join(q_keep.select("doc_id"), "doc_id", "left_semi")
+        )
     else:
         s375 = s35
 
@@ -264,9 +267,7 @@ def build_training_corpus(
         # scores the survivor frame directly — no temp-table round-trip
         lm = lm_perplexity_frame(s375.select("doc_id", "lang", "text"))
     keep_lm = lm.filter(F.col("ppl_tercile") <= 2).select("doc_id")
-    selected = s375.join(keep_lm, "doc_id", "left_semi").localCheckpoint(
-        eager=True
-    )
+    selected = checkpoint.truncate(s375.join(keep_lm, "doc_id", "left_semi"))
 
     # ---- stage 4.5 (optional): leakage-safe split labels — every
     # shipped doc carries train/val/test hashed on its near-dup-cluster

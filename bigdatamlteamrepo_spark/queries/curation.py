@@ -69,6 +69,7 @@ from bigdatamlteamrepo_spark.functions.text import (
     tokenize,
     uh_constants,
 )
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
 from bigdatamlteamrepo_spark.operators.sketches import (
     POW60,
     bottomk_cutoff_sql,
@@ -178,21 +179,22 @@ def passage_neardup_doc_pairs(
     corpora only).
 
     ``materialize``: the default materializes the shared passage-set
-    and band stages as LAZY localCheckpoints — the auto-cap's bounded
-    collect is the first action and fills both in one job, where the
-    r12 persist + eager-output chain paid separate fill and copy
-    barriers (r13, guide §2.4; interleaved A/B at sf0.1: 1.97 → 1.75 s
-    min, 2.10 → 1.88 s med, value-identical).  Checkpointed blocks are
-    released by the ContextCleaner when the returned frame is dropped
-    (the graph-operator discipline), so repeated invocations still
-    cannot accumulate unbounded executor storage.  ``materialize=False``
+    and band stages as LAZY lineage cuts (``truncate``) — the
+    auto-cap's bounded collect is the first action and fills both in
+    one job, where the r12 persist + eager-output chain paid separate
+    fill and copy barriers (r13; interleaved A/B at sf0.1:
+    1.97 → 1.75 s min, 2.10 → 1.88 s med, value-identical).
+    Checkpointed blocks are released by the ContextCleaner when the
+    returned frame is dropped (the graph-operator discipline), so
+    repeated invocations still cannot accumulate unbounded executor
+    storage.  ``materialize=False``
     builds the fully lazy plan (no checkpoints, the shingle subtree is
     simply evaluated per consumer) — the form the plan-gate tests
     inspect.
     """
 
     def _keep(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if materialize else df
+        return truncate(df, eager=False) if materialize else df
 
     psets = _keep(_passage_sets(docs))
 
@@ -314,7 +316,7 @@ def passage_neardup_doc_pairs(
         # lazy checkpoint of the doc-pair-sized result: the caller's
         # first action materializes it (severing lineage back into the
         # corpus-sized stages); repeated consumption reuses it
-        out = out.localCheckpoint(eager=False)
+        out = truncate(out, eager=False)
     return out
 
 
@@ -440,14 +442,12 @@ def _doc_grams(docs: DataFrame) -> DataFrame:
 
 
 def _doc_grams_m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached :func:`_doc_grams` stream over the sf_dir corpus
-    (per-doc-DISTINCT 8-gram md5 rows) — shared by doc_ngram_novelty
-    and the source-overlap family.  None when the stage cache is off,
-    so every consumer keeps its exact cache-free plan."""
+    """:func:`_doc_grams` stream over the sf_dir corpus (per-doc-DISTINCT
+    8-gram md5 rows) — shared by doc_ngram_novelty and the
+    source-overlap family when the stage cache is on, the same lazy
+    plan per query when it is off."""
     from bigdatamlteamrepo_spark import stagecache
 
-    if not stagecache.enabled():
-        return None
     return stagecache.shared(
         ("doc_grams8", sf_dir),
         lambda: _doc_grams(_with_tokens(spark, sf_dir)),
@@ -618,7 +618,7 @@ def overlap_matrix(
         ),
     )
     if materialize:
-        out = out.localCheckpoint(eager=True)
+        out = truncate(out)
         sg.unpersist()
     return out
 
@@ -820,7 +820,7 @@ def overlap_kmv(
         ),
     )
     if materialize:
-        out = out.localCheckpoint(eager=True)
+        out = truncate(out)
         sgh.unpersist()
     return out
 
@@ -1072,27 +1072,6 @@ def _tagged_gram_hashes(t: DataFrame, as_int: bool = True) -> DataFrame:
     ).select("source", F.col("x.n").alias("n"), F.col("x.gh").alias("gh"))
 
 
-def _tagged_gram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(source, n, gh, c) — the Zipf-collapsed distinct-gram table for
-    widths 1..3 (rows = distinct (source, n, gram)s, never corpus
-    tokens).  Session-cached: the stage is shared by
-    source_distinct_ngrams (counts its rows) and
-    source_distinct_ngrams_hll (HLL registers over gh are
-    duplicate-insensitive, so aggregating the collapsed table equals
-    aggregating the stream)."""
-    from bigdatamlteamrepo_spark import stagecache
-
-    def build() -> DataFrame:
-        t = ensure_tokens(_with_tokens(spark, sf_dir), "source")
-        return (
-            _tagged_gram_hashes(t)
-            .groupBy("source", "n", "gh")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-
-    return stagecache.shared(("tagged_gram_counts", sf_dir), build)
-
-
 @query(
     "source_distinct_ngrams",
     bench=True,
@@ -1168,21 +1147,14 @@ def source_distinct_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("x"),
     ).select("source", "x.n", "x.total_ngrams")
-    from bigdatamlteamrepo_spark import stagecache
-
-    if stagecache.enabled():
-        # session-cached collapsed table (BIGINT gh — shared with the
-        # HLL face, which needs register arithmetic on it)
-        collapsed = _tagged_gram_counts(spark, sf_dir)
-    else:
-        # cache-off: gh stays the 15-hex substring — same distinct
-        # counts (hex→int is a bijection), no conv parse per gram
-        # (r13; see _tagged_gram_hashes)
-        collapsed = (
-            _tagged_gram_hashes(t, as_int=False)
-            .groupBy("source", "n", "gh")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
+    # gh stays the 15-hex substring — same distinct counts (hex→int is
+    # a bijection), no conv parse per gram (r13; see
+    # _tagged_gram_hashes)
+    collapsed = (
+        _tagged_gram_hashes(t, as_int=False)
+        .groupBy("source", "n", "gh")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
     types = collapsed.groupBy("source", "n").agg(
         F.count(F.lit(1)).cast("bigint").alias("distinct_ngrams")
     )
@@ -1361,15 +1333,8 @@ def source_distinct_ngrams_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_agg_finalize,
     )
 
-    from bigdatamlteamrepo_spark import stagecache
-
-    if stagecache.enabled():
-        # HLL registers are duplicate-insensitive: the session-cached
-        # collapsed gram table yields identical registers to the stream
-        h = _tagged_gram_counts(spark, sf_dir)
-    else:
-        t = ensure_tokens(_with_tokens(spark, sf_dir), "source")
-        h = _tagged_gram_hashes(t)
+    t = ensure_tokens(_with_tokens(spark, sf_dir), "source")
+    h = _tagged_gram_hashes(t)
     regs = h.groupBy("source", "n").agg(
         *hll_agg_exprs(F.col("gh"), _DN_HLL_P)
     )

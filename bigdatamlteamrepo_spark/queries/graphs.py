@@ -108,8 +108,8 @@ def triangle_count(e: DataFrame) -> DataFrame:
     distinct).  Wedges are built on out-neighbors only (out-degree is
     O(√|E|) after degree ordering), then matched against the oriented
     edge list — two equi-joins, no row ever carries more than three ids."""
-    e = e.localCheckpoint(eager=True)  # reused by degree, wedge and probe sides
-    o = oriented_edges(e).localCheckpoint(eager=True)
+    e = truncate(e)  # reused by degree, wedge and probe sides
+    o = truncate(oriented_edges(e))
     o1 = o.select(F.col("src"), F.col("dst").alias("b"), F.col("dst_d").alias("bd"))
     o2 = o.select(F.col("src"), F.col("dst").alias("c"), F.col("dst_d").alias("cd"))
     wedges = o1.join(o2, "src").filter(
@@ -424,7 +424,7 @@ def part_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    o = oriented_edges(e).localCheckpoint(eager=True)
+    o = truncate(oriented_edges(e))
     o1 = o.select("src", F.col("dst").alias("b"), F.col("dst_d").alias("bd"))
     o2 = o.select("src", F.col("dst").alias("c"), F.col("dst_d").alias("cd"))
     wedges = o1.join(o2, "src").filter(

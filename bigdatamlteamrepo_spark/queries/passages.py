@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.catalog import load_table
 from bigdatamlteamrepo_spark.functions.text import ensure_tokens, tokenize
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
 from bigdatamlteamrepo_spark.queries.registry import query
 from bigdatamlteamrepo_spark.queries.text_dedup import _TOKENS_SQL, _with_tokens
 
@@ -370,7 +371,6 @@ def dup_substring_spans(
     docs: DataFrame,
     w: int = SPAN_W,
     cache_key: str | None = None,
-    prefilter: bool = True,
 ) -> DataFrame:
     """Maximal duplicated spans per document: every stride-1 w-token
     window occurring ≥2 times in the corpus, island-merged
@@ -389,10 +389,10 @@ def dup_substring_spans(
     the other frame's windows.  Subset callers leave it None (the
     default).
 
-    ``prefilter`` (r13, guide §2.3/§3.2): the md5 window stream used to
-    shuffle+sort in full for the duplicate count — O(corpus tokens)
-    rows × (32-hex hash + ids), the dominant stage at sf10 (98 s wall).
-    The rewrite prunes with a LOSSLESS 64-bit pre-count first:
+    Plan (r13): counting the full md5 window stream
+    shuffles+sorts O(corpus tokens) rows × (32-hex hash + ids) — the
+    dominant stage at sf10 (98 s wall).  Instead the windows are pruned
+    with a LOSSLESS 64-bit pre-count first:
 
     1. one pass emits ``xxhash64`` of each w-token slice (no string
        concat, no md5, 8-byte keys) and hash-aggregates counts — the
@@ -410,25 +410,11 @@ def dup_substring_spans(
        either all its copies survive or it was a singleton; h64
        collisions only ADD survivors, which the md5 count then drops.
 
-    Output is bit-identical to the unfiltered plan under the same
+    Output equals counting the full md5 stream under the same
     no-md5-collision assumption the md5 design itself already makes
     (pinned vs the brute force in tests/test_substring_dedup.py, incl.
-    collision-heavy random corpora).  ``prefilter=False`` keeps the r12
-    single-pass window-count plan for A/B probes."""
+    collision-heavy random corpora)."""
     from bigdatamlteamrepo_spark import stagecache
-
-    if not prefilter:
-        wins = window_hashes(docs, w)
-        # r12 shape: duplicated-window flag via ONE window count over
-        # the md5 hash (groupBy+join-back evaluated the stream twice;
-        # measured 2.13 → 1.26 s min at sf0.1)
-        cnt = F.count(F.lit(1)).over(Window.partitionBy("h"))
-        dw = (
-            wins.withColumn("__cnt", cnt)
-            .filter(F.col("__cnt") >= 2)
-            .select("doc_id", "source", "start")
-        )
-        return merge_windows_to_spans(dw, w)
 
     if cache_key is not None:
         dw = stagecache.shared(
@@ -456,10 +442,10 @@ def _dup_windows(docs: DataFrame, w: int) -> DataFrame:
             lambda i: F.xxhash64(F.slice("toks", i, F.lit(w))),
         ),
     ).otherwise(F.expr("CAST(array() AS ARRAY<BIGINT>)"))
-    tm = (
+    tm = truncate(
         ensure_tokens(docs, "doc_id", "source")
-        .withColumn("__hs", h64s)
-        .localCheckpoint(eager=False)
+        .withColumn("__hs", h64s),
+        eager=False,
     )
     # pass 1: counts over 8-byte keys only — hash aggregate (no sort),
     # map-side partial combine, nothing else in the row

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.catalog import load_table
 from bigdatamlteamrepo_spark.functions.text import ensure_tokens, shingles, tokenize
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
 from bigdatamlteamrepo_spark.operators.pii import pii_counts, pii_counts_sql
 from bigdatamlteamrepo_spark.queries.registry import query
 from bigdatamlteamrepo_spark.queries.text_dedup import (
@@ -780,21 +781,18 @@ def surgical_decontaminate(
     base_cols = docs.columns
     clean = False
     for _ in range(max_iter):
-        spans = eval_contamination_spans(
-            out.select(*base_cols), ev, w
-        ).localCheckpoint(eager=True)
+        spans = truncate(eval_contamination_spans(out.select(*base_cols), ev, w))
         if not spans.take(1):
             clean = True
             break
         cut = apply_span_cuts(out.select(*base_cols), spans)
-        out = (
+        out = truncate(
             cut.join(
                 out.select("doc_id", F.col("n_tokens_cut").alias("__prev")),
                 "doc_id",
             )
             .withColumn("n_tokens_cut", F.col("__prev") + F.col("n_tokens_cut"))
             .drop("__prev")
-            .localCheckpoint(eager=True)
         )
     if not clean and eval_contamination_spans(
         out.select(*base_cols), ev, w
@@ -1288,12 +1286,12 @@ def doc_bm25_rm3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok_stream = t.select(
         "doc_id", F.size("toks").alias("dl"), F.explode("toks").alias("term")
     )
-    doc_tf = (
+    # feeds BOTH df and the kernel — without the cut the corpus
+    # explode would run twice
+    doc_tf = truncate(
         tok_stream.join(F.broadcast(exp_terms), "term")
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"), F.max("dl").alias("dl"))
-        .localCheckpoint(eager=True)  # feeds BOTH df and the kernel —
-        # without it the corpus explode would run twice
     )
     # df falls out of doc_tf's grain: one row per doc containing the term
     term_df = doc_tf.groupBy("term").agg(

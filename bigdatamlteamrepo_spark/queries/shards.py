@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.catalog import load_table
 from bigdatamlteamrepo_spark.functions.text import tokenize
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
 from bigdatamlteamrepo_spark.queries.registry import query
 from bigdatamlteamrepo_spark.queries.text_dedup import _TOKENS_SQL
 
@@ -523,9 +524,7 @@ def packed_token_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-doc token count needs no explode at all — it is F.size(toks)
     # off the array frame (r12, guide §2.3; measured at sf0.1:
     # 0.84 → 0.71 s min, 0.91 → 0.74 s median).
-    t = docs.select(
-        "source", "doc_id", tokenize("text").alias("toks")
-    ).localCheckpoint(eager=True)
+    t = truncate(docs.select("source", "doc_id", tokenize("text").alias("toks")))
     s = t.select(
         "source",
         "doc_id",
@@ -632,11 +631,10 @@ def packed_bpe_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    words = (
+    words = truncate(
         docs.select(F.explode(tokenize_words("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .localCheckpoint(eager=True)
     )
     merges = [m[1] for m in learn_bpe_merges(words)]
     enc = bpe_encode_words(words, merges).select("word", "symbols")
@@ -651,14 +649,13 @@ def packed_bpe_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # wsyms feeds both the per-doc count and the id stream — one
     # materialization (word fan-out + two joins are the heavy stage)
-    wsyms = (
+    wsyms = truncate(
         t.join(enc, "word")
         .select(
             "source", "doc_id", "wpos",
             F.posexplode("symbols").alias("spos", "sym"),
         )
         .join(sym_vocab, "sym")
-        .localCheckpoint(eager=True)
     )
     per_doc = wsyms.groupBy("source", "doc_id").agg(
         F.count(F.lit(1)).alias("n_syms")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.catalog import load_table, maybe_broadcast
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
 from bigdatamlteamrepo_spark.operators.pagerank import integer_pagerank, pagerank_cte_sql
 from bigdatamlteamrepo_spark.operators.sketches import (
     KMV_K,
@@ -901,11 +902,10 @@ def source_ngram_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     w_src = Window.partitionBy("source").orderBy("h")
-    sk = (
+    sk = truncate(  # reused by pair expansion + stats
         g.withColumn("rn", F.row_number().over(w_src))
         .filter(F.col("rn") <= KMV_K)
         .select("source", "h")
-        .localCheckpoint(eager=True)  # reused by pair expansion + stats
     )
     st = sk.groupBy("source").agg(
         F.max("h").alias("kth"), F.count(F.lit(1)).alias("n_kept")

@@ -19,6 +19,8 @@ Scale notes:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -32,6 +34,7 @@ from bigdatamlteamrepo_spark.functions.text import (
     tokenize,
     ws_tokens,
 )
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
 from bigdatamlteamrepo_spark.queries.registry import query
 
 #: flagship keyword set (allergen-keyword analogue over the synthetic vocab)
@@ -429,7 +432,7 @@ def doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with_fps = docs.withColumn("hs", hs).select("doc_id", fps_arr.alias("fp"))
     # materialize once: fingerprint explode AND per-doc counts read it
-    with_fps = with_fps.localCheckpoint(eager=True)
+    with_fps = truncate(with_fps)
     counts = with_fps.select("doc_id", F.size("fp").alias("n_fps"))
     fp = with_fps.select("doc_id", F.explode("fp").alias("f"))
     a, b = fp.alias("a"), fp.alias("b")
@@ -1017,20 +1020,23 @@ def lsh_candidate_pairs(
     # materialize the banded signatures once: the self-join below would
     # otherwise run the whole signature aggregation twice, once per
     # alias; (doc_id, band) rows are tiny relative to the corpus.
-    # With the session stage cache on, the materialized band table is
-    # shared across queries instead of rebuilt per query.
-    if stagecache.enabled() and (sets is None or corpus_sets):
-        bands = corpus_band_rows(spark, sf_dir, n_hashes, n_bands)
+    # LAZY when salt="auto" (the default): the width aggregate's 1-row
+    # collect below is the first action and fills it — one job instead
+    # of eager-copy + re-read (r13); the self-join then reads the
+    # materialized partitions.  With salt=None the self-join IS the
+    # first consumer and its two concurrently-scheduled scan stages
+    # could each compute the unmaterialized signature chain — keep the
+    # eager copy there.  A full-corpus band table is shared across
+    # queries when the session stage cache is on.
+    def build() -> DataFrame:
+        return lsh_band_rows(df, shingle_col, n_hashes, n_bands)
+
+    if sets is None or corpus_sets:
+        bands = stagecache.materialized(
+            ("lsh_bands", sf_dir, n_hashes, n_bands), build, eager=salt is None
+        )
     else:
-        # LAZY checkpoint when salt="auto" (the default): the width
-        # aggregate's 1-row collect below is the first action and fills
-        # it — one job instead of eager-copy + re-read (r13, §2.4);
-        # the self-join then reads the materialized partitions.  With
-        # salt=None the self-join IS the first consumer and its two
-        # concurrently-scheduled scan stages could each compute the
-        # unmaterialized signature chain — keep the eager copy there.
-        bands = lsh_band_rows(df, shingle_col, n_hashes, n_bands)
-        bands = bands.localCheckpoint(eager=salt is None)
+        bands = truncate(build(), eager=salt is None)
 
     def _pairs(frame: DataFrame) -> DataFrame:
         a, b = frame.alias("a"), frame.alias("b")
@@ -1060,7 +1066,7 @@ def lsh_candidate_pairs(
     # hot keys are FEW by construction (≤ |band rows| / thr), so the
     # split is a broadcast membership mark — the band table itself
     # never shuffles against the width table.  bands is materialized
-    # (localCheckpoint / stage cache), so building the broadcast side
+    # (truncate / stage cache), so building the broadcast side
     # re-runs only the small width agg, not the signature chain.
     hot_keys = widths.filter(F.col("__w") > thr).select(
         "band", F.lit(True).alias("__hot")
@@ -1216,8 +1222,18 @@ def doc_shingle_sets(docs: DataFrame) -> DataFrame:
     )
 
 
-def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`doc_shingle_sets` over the driver corpus.
+def _shingle_stage(
+    spark: SparkSession, sf_dir: str
+) -> tuple[tuple, Callable[[], DataFrame]]:
+    """(stage-cache key, builder) of :func:`doc_shingle_sets` over the
+    sf_dir corpus.  :func:`_shingle_sets` runs it through
+    ``stagecache.shared``; the faces that read the sets more than once
+    run it through ``stagecache.materialized(..., eager=False)``: with
+    the cache off that is a LAZY cut whose first consuming job fills it
+    (in every such face that first job is sequential — the band-width
+    collect, a band cut, or a single-reference plan), so no dedicated
+    materialization barrier runs (r13; interleaved A/B inside
+    neardup_dedup_summary: med 2.78 → 2.61 s, min flat).
 
     Deliberately NO repartition before the tokenize → shingle chain:
     measured at bench SF, widening a small single-split scan to 32
@@ -1226,60 +1242,16 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_shared_shingle_stats); at real scale the file layout provides
     the splits and the shuffle would be pure overhead.
     """
-    return stagecache.shared(
-        ("shingle_sets", sf_dir),
-        lambda: doc_shingle_sets(_with_tokens(spark, sf_dir)),
+    return ("shingle_sets", sf_dir), lambda: doc_shingle_sets(
+        _with_tokens(spark, sf_dir)
     )
 
 
-def _shingle_sets_m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized :func:`_shingle_sets`: the session-cached frame
-    when the stage cache is on (already persisted + materialized —
-    re-checkpointing it per query would copy the partitions for
-    nothing), else a fresh per-call LAZY localCheckpoint: the first
-    consuming job fills it (in every registered consumer that first
-    job is sequential — the band-width collect, a band ckpt, or a
-    single-reference plan), so the dedicated materialization barrier
-    disappears (r13, guide §2.4; interleaved A/B inside
-    neardup_dedup_summary: med 2.78 → 2.61 s, min flat)."""
-    sets = _shingle_sets(spark, sf_dir)
-    return sets if stagecache.enabled() else sets.localCheckpoint(eager=False)
-
-
-def corpus_uh_signatures(
-    spark: SparkSession, sf_dir: str, n_hashes: int = LSH_N_HASHES
-) -> DataFrame:
-    """Session-cached full-corpus MinHash signature frame (stage-cache
-    path only — callers keep their own per-query materialization when
-    the cache is off).  MinHash over the DISTINCT shingle set equals
-    MinHash over the raw shingle list (a min is duplicate-insensitive),
-    so banding and b-bit estimation share one signature aggregation."""
-    return stagecache.shared(
-        ("uh_signatures", sf_dir, n_hashes),
-        lambda: uh_signature_frame(
-            _shingle_sets(spark, sf_dir), F.col("s"), n_hashes
-        ),
-    )
-
-
-def corpus_band_rows(
-    spark: SparkSession,
-    sf_dir: str,
-    n_hashes: int = LSH_N_HASHES,
-    n_bands: int = LSH_N_BANDS,
-) -> DataFrame:
-    """Session-cached full-corpus (doc_id, band) rows, derived from the
-    cached signature frame (stage-cache path only)."""
-    from bigdatamlteamrepo_spark.functions.text import band_keys
-
-    mh = F.array(*[F.col(f"m{i}") for i in range(n_hashes)])
-
-    def build() -> DataFrame:
-        return corpus_uh_signatures(spark, sf_dir, n_hashes).select(
-            "doc_id", F.explode(band_keys(mh, n_hashes, n_bands)).alias("band")
-        )
-
-    return stagecache.shared(("lsh_bands", sf_dir, n_hashes, n_bands), build)
+def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`doc_shingle_sets` over the sf_dir corpus: the lazy plan
+    with the stage cache off, the session's shared persisted frame
+    with it on."""
+    return stagecache.shared(*_shingle_stage(spark, sf_dir))
 
 
 def _pair_jaccard(
@@ -1292,7 +1264,7 @@ def _pair_jaccard(
     # both join sides read the same shingle-set table; materialize it
     # once instead of re-tokenizing/re-shingling the corpus per side
     if materialize:
-        sets = sets.localCheckpoint(eager=True)
+        sets = truncate(sets)
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("s").alias("s_a"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("s").alias("s_b"))
     inter = F.size(F.array_intersect(F.col("s_a"), F.col("s_b")))
@@ -1326,7 +1298,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # evidence and cannot discriminate (measured 0-1% candidate
     # reduction at any safe threshold — see SCALING.md "b-bit verify
     # prefilter" and :func:`bbit_prefilter`).
-    sets = _shingle_sets_m(spark, sf_dir)
+    sets = stagecache.materialized(*_shingle_stage(spark, sf_dir), eager=False)
     cand = lsh_candidate_pairs(spark, sf_dir, sets=sets, corpus_sets=True)
     return _pair_jaccard(cand, sets, _JACCARD_MIN, materialize=False)
 
@@ -1394,11 +1366,12 @@ def neardup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose exact shingle Jaccard with an index document is ≥ 0.5,
     candidates generated by the band equi-join (never n×m).
     """
-    sets = _shingle_sets_m(spark, sf_dir)
-    if stagecache.enabled():
-        bands = corpus_band_rows(spark, sf_dir)
-    else:
-        bands = lsh_band_rows(sets, F.col("s")).localCheckpoint(eager=True)
+    sets = stagecache.materialized(*_shingle_stage(spark, sf_dir), eager=False)
+    bands = stagecache.materialized(
+        ("lsh_bands", sf_dir, LSH_N_HASHES, LSH_N_BANDS),
+        lambda: lsh_band_rows(sets, F.col("s")),
+        eager=True,
+    )
     is_new = F.col("doc_id") % _INCR_MOD == 0
     cand = (
         bands.filter(is_new)
@@ -1465,7 +1438,7 @@ def doc_shared_shingle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same shuffle key with one explode and one exchange (r12,
     # guide §2.3/§2.4; measured at sf0.1: 1.03 → 0.81 s min,
     # 1.13 → 0.87 s median, noop sink min-of-5)
-    sets = _shingle_sets_m(spark, sf_dir)
+    sets = stagecache.materialized(*_shingle_stage(spark, sf_dir), eager=False)
     ex = sets.select("doc_id", F.explode("s").alias("g"))
     nd = F.count(F.lit(1)).over(Window.partitionBy("g"))
     shared = F.sum(F.when(F.col("nd") > 1, 1).otherwise(0)).cast("long")
@@ -1551,11 +1524,11 @@ def bbit_minhash_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compressed-signature tier (module comment above).  One
     signature aggregation feeds both the banding (candidates) and the
     2-bit agreement join; only (doc_id, 24 longs) rows shuffle."""
-    if stagecache.enabled():
-        sig = corpus_uh_signatures(spark, sf_dir)
-    else:
-        sets = _shingle_sets(spark, sf_dir)
-        sig = uh_signature_frame(sets, F.col("s")).localCheckpoint(eager=True)
+    sig = stagecache.materialized(
+        ("uh_signatures", sf_dir, LSH_N_HASHES),
+        lambda: uh_signature_frame(_shingle_sets(spark, sf_dir), F.col("s")),
+        eager=True,
+    )
     from bigdatamlteamrepo_spark.functions.text import band_keys
 
     mh = F.array(*[F.col(f"m{i}") for i in range(LSH_N_HASHES)])
@@ -1645,7 +1618,7 @@ def bbit_independent_agreement_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     symbolically and counts equalities — a hash match pins the hash
     family, the bit-plane packing, and the popcount identity
     ``n_agree = 128 - popcount((p^p')|(q^q'))`` in one check."""
-    sets = _shingle_sets_m(spark, sf_dir)
+    sets = stagecache.materialized(*_shingle_stage(spark, sf_dir), eager=False)
     cand = lsh_candidate_pairs(spark, sf_dir, sets=sets, corpus_sets=True)
     sk = bbit_sketch_frame(sets, F.col("s"))
     return bbit_independent_agreement(cand, sk)

@@ -65,6 +65,7 @@ from bigdatamlteamrepo_spark.functions.text import (
     tokenize,
     tokenize_words,
 )
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
 from bigdatamlteamrepo_spark.queries.registry import query
 from bigdatamlteamrepo_spark.queries.shards import hash32
 from bigdatamlteamrepo_spark.queries.text_dedup import _TOKENS_SQL, _with_tokens
@@ -856,7 +857,7 @@ def corpus_survivor_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs), materialized small (one bigint column, corpus-shrunk) and
     released from executor storage before returning."""
     stages = corpus_stage_frames(spark, sf_dir)
-    out = stages["sel"].localCheckpoint(eager=True)
+    out = truncate(stages["sel"])
     for frame in stages.values():
         frame.unpersist()
     return out
@@ -889,16 +890,18 @@ def corpus_build_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         base = base.join(
             frame.withColumn(f"__{name}", F.lit(1)), "doc_id", "left"
         )
-    report = base.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_input"),
-        F.sum(F.coalesce("__s1", F.lit(0))).cast("bigint").alias("n_gopher"),
-        F.sum(F.coalesce("__s2", F.lit(0))).cast("bigint").alias("n_exact"),
-        F.sum(F.coalesce("__s3", F.lit(0))).cast("bigint").alias("n_neardup"),
-        F.sum(F.coalesce("__sel", F.lit(0))).cast("bigint").alias("n_selected"),
-        F.sum(F.when(F.col("__sel") == 1, F.col("n_chars")).otherwise(0))
-        .cast("bigint")
-        .alias("chars_shipped"),
-    ).localCheckpoint(eager=True)
+    report = truncate(
+        base.groupBy("source").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_input"),
+            F.sum(F.coalesce("__s1", F.lit(0))).cast("bigint").alias("n_gopher"),
+            F.sum(F.coalesce("__s2", F.lit(0))).cast("bigint").alias("n_exact"),
+            F.sum(F.coalesce("__s3", F.lit(0))).cast("bigint").alias("n_neardup"),
+            F.sum(F.coalesce("__sel", F.lit(0))).cast("bigint").alias("n_selected"),
+            F.sum(F.when(F.col("__sel") == 1, F.col("n_chars")).otherwise(0))
+            .cast("bigint")
+            .alias("chars_shipped"),
+        )
+    )
     for frame in stages.values():
         frame.unpersist()
     return report
@@ -1020,17 +1023,19 @@ def corpus_incremental_build_summary(
         base = base.join(
             frame.withColumn(f"__{name}", F.lit(1)), "doc_id", "left"
         )
-    report = base.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_batch"),
-        F.sum(F.coalesce("__s1", F.lit(0))).cast("bigint").alias("n_gopher"),
-        F.sum(F.coalesce("__s2", F.lit(0))).cast("bigint").alias("n_exact_new"),
-        F.sum(F.coalesce("__s3", F.lit(0)))
-        .cast("bigint")
-        .alias("n_neardup_new"),
-        F.sum(F.when(F.col("__s3") == 1, F.col("n_chars")).otherwise(0))
-        .cast("bigint")
-        .alias("chars_appended"),
-    ).localCheckpoint(eager=True)
+    report = truncate(
+        base.groupBy("source").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_batch"),
+            F.sum(F.coalesce("__s1", F.lit(0))).cast("bigint").alias("n_gopher"),
+            F.sum(F.coalesce("__s2", F.lit(0))).cast("bigint").alias("n_exact_new"),
+            F.sum(F.coalesce("__s3", F.lit(0)))
+            .cast("bigint")
+            .alias("n_neardup_new"),
+            F.sum(F.when(F.col("__s3") == 1, F.col("n_chars")).otherwise(0))
+            .cast("bigint")
+            .alias("chars_appended"),
+        )
+    )
     for frame in stages.values():
         frame.unpersist()
     return report
@@ -1103,18 +1108,20 @@ def ingest_decon_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         base = base.join(
             stages[name].withColumn(f"__{name}", F.lit(1)), "doc_id", "left"
         )
-    report = base.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_batch"),
-        F.sum(F.coalesce("__s3", F.lit(0)))
-        .cast("bigint")
-        .alias("n_neardup_new"),
-        F.sum(F.coalesce("__s4", F.lit(0)))
-        .cast("bigint")
-        .alias("n_decon_clean"),
-        F.sum(F.when(F.col("__s4") == 1, F.col("n_chars")).otherwise(0))
-        .cast("bigint")
-        .alias("chars_appended"),
-    ).localCheckpoint(eager=True)
+    report = truncate(
+        base.groupBy("source").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_batch"),
+            F.sum(F.coalesce("__s3", F.lit(0)))
+            .cast("bigint")
+            .alias("n_neardup_new"),
+            F.sum(F.coalesce("__s4", F.lit(0)))
+            .cast("bigint")
+            .alias("n_decon_clean"),
+            F.sum(F.when(F.col("__s4") == 1, F.col("n_chars")).otherwise(0))
+            .cast("bigint")
+            .alias("chars_appended"),
+        )
+    )
     for frame in stages.values():
         frame.unpersist()
     return report
@@ -1334,16 +1341,18 @@ def learn_bpe_merges(
     :func:`learn_bpe_merges_batched`, which applies the top-``batch``
     symbol-disjoint merges per round and bounds driver round-trips at
     O(n_merges / batch)."""
-    syms = words.select(
-        "freq",
-        F.concat(
-            F.transform(
-                F.sequence(F.lit(1), F.length("word")),
-                lambda i: F.col("word").substr(i, F.lit(1)),
-            ),
-            F.array(F.lit("</w>")),
-        ).alias("symbols"),
-    ).localCheckpoint(eager=True)
+    syms = truncate(
+        words.select(
+            "freq",
+            F.concat(
+                F.transform(
+                    F.sequence(F.lit(1), F.length("word")),
+                    lambda i: F.col("word").substr(i, F.lit(1)),
+                ),
+                F.array(F.lit("</w>")),
+            ).alias("symbols"),
+        )
+    )
     merges: list[tuple[int, str, int]] = []
     for r in range(1, n_rounds + 1):
         pairs = (
@@ -1374,9 +1383,11 @@ def learn_bpe_merges(
         pair, cnt = top[0]["pair"], top[0]["cnt"]
         merges.append((r, pair, cnt))
         a, b = pair.split(" ", 1)
-        syms = syms.select(
-            "freq", _apply_merge(F.col("symbols"), a, b).alias("symbols")
-        ).localCheckpoint(eager=True)
+        syms = truncate(
+            syms.select(
+                "freq", _apply_merge(F.col("symbols"), a, b).alias("symbols")
+            )
+        )
     return merges
 
 
@@ -1436,16 +1447,18 @@ def learn_bpe_merges_batched(
     runs on those scalars driver-side), one fold + localCheckpoint.
     Returns [(rank, "a b", count)]; ``stats['rounds']`` reports the
     round count when a dict is passed."""
-    syms = words.select(
-        "freq",
-        F.concat(
-            F.transform(
-                F.sequence(F.lit(1), F.length("word")),
-                lambda i: F.col("word").substr(i, F.lit(1)),
-            ),
-            F.array(F.lit("</w>")),
-        ).alias("symbols"),
-    ).localCheckpoint(eager=True)
+    syms = truncate(
+        words.select(
+            "freq",
+            F.concat(
+                F.transform(
+                    F.sequence(F.lit(1), F.length("word")),
+                    lambda i: F.col("word").substr(i, F.lit(1)),
+                ),
+                F.array(F.lit("</w>")),
+            ).alias("symbols"),
+        )
+    )
     merges: list[tuple[int, str, int]] = []
     rounds = 0
     while len(merges) < n_merges:
@@ -1493,12 +1506,14 @@ def learn_bpe_merges_batched(
             break
         for a, b, cnt in selected:
             merges.append((len(merges) + 1, f"{a} {b}", cnt))
-        syms = syms.select(
-            "freq",
-            _apply_merge_batch(
-                F.col("symbols"), [(a, b) for a, b, _ in selected]
-            ).alias("symbols"),
-        ).localCheckpoint(eager=True)
+        syms = truncate(
+            syms.select(
+                "freq",
+                _apply_merge_batch(
+                    F.col("symbols"), [(a, b) for a, b, _ in selected]
+                ).alias("symbols"),
+            )
+        )
     if stats is not None:
         stats["rounds"] = rounds
     return merges
@@ -1585,15 +1600,14 @@ def doc_lm_perplexity_hotsplit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vsz = t.select(F.explode("toks").alias("tok")).agg(
         F.countDistinct("tok").alias("vsz")
     )
-    lmx = (
+    lmx = truncate(  # reused by hot select, semi, anti, cold
         lm.withColumn("x", F.split("bigram", " ")[0])
         .join(uni, "x")
         .select("bigram", "c_xy", "c_x")
-        .localCheckpoint(eager=True)  # reused by hot select, semi, anti, cold
     )
-    hot = (
+    hot = truncate(
         lmx.orderBy(F.col("c_xy").desc(), "bigram").limit(LM_HOT_K)
-    ).localCheckpoint(eager=True)
+    )
     bg_hot = bg.join(F.broadcast(hot.select("bigram")), "bigram", "left_semi")
     bg_cold = bg.join(F.broadcast(hot.select("bigram")), "bigram", "left_anti")
     cold = lmx.join(F.broadcast(hot.select("bigram")), "bigram", "left_anti")
@@ -1660,11 +1674,10 @@ def bpe_encode_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the DISTINCT-word table (Zipf-collapsed); re-joining subword
     ids back onto the token stream is one broadcast of the vocab."""
     docs = load_table(spark, sf_dir, "documents")
-    words = (
+    words = truncate(
         docs.select(F.explode(tokenize_words("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .localCheckpoint(eager=True)
     )
     merges = [m[1] for m in learn_bpe_merges(words)]
     enc = bpe_encode_words(words, merges)

@@ -53,6 +53,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
 from bigdatamlteamrepo_spark.queries.text_dedup import (
     doc_shingle_sets,
     lsh_band_rows,
@@ -473,12 +474,14 @@ def ingest_decisions(
         decision = decision.when(
             F.col("__s4").isNull(), "eval_contaminated"
         )
-    out = base.select(
-        "doc_id",
-        "source",
-        "n_chars",
-        decision.otherwise("accepted").alias("decision"),
-    ).localCheckpoint(eager=True)
+    out = truncate(
+        base.select(
+            "doc_id",
+            "source",
+            "n_chars",
+            decision.otherwise("accepted").alias("decision"),
+        )
+    )
     for name, frame in stages.items():
         # the shared batch-sets frame is the CALLER's to release (it
         # still feeds append_to_indexes) — skip it by its dict key,

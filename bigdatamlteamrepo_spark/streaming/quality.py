@@ -32,6 +32,7 @@ from bigdatamlteamrepo_spark.ml.quality import (
     load_quality_weights,
     score_with_weights,
 )
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
 from bigdatamlteamrepo_spark.streaming.ingest import _batch_tag, _join
 
 
@@ -53,7 +54,7 @@ def score_quality_stream(
     weights, intercept = load_quality_weights(spark, weights_dir)
     # the model is frozen for the life of the stream: materialize the
     # vocab-sized table once, not once per trigger
-    weights = weights.localCheckpoint(eager=True)
+    weights = truncate(weights)
     ns = hashlib.md5(checkpoint_dir.encode()).hexdigest()[:8]
 
     def _process(batch: DataFrame, batch_id: int) -> None:

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.functions.vectors import l2_sq
+from bigdatamlteamrepo_spark.operators.checkpoint import truncate
 from bigdatamlteamrepo_spark.operators.pq import (
     PQ_M,
     PQ_SUB,
@@ -96,7 +97,7 @@ def append_vectors_batch(
     spark = batch.sparkSession
     centroids = spark.read.parquet(_join(index_dir, "centroids"))
     books = spark.read.parquet(_join(index_dir, "codebooks"))
-    assigned = assign_cells(batch, centroids).localCheckpoint(eager=True)
+    assigned = truncate(assign_cells(batch, centroids))
     codes = (
         pq_encode(batch, books, m, sub)
         .join(assigned.select("vec_id", "cell"), "vec_id")

@@ -3,8 +3,8 @@
 The registered LPA / k-core queries run FIXED rounds; the audit faces
 emit per-round deltas including one probe round past the budget, and
 at every tested SF the probe delta must be 0 (the fixed-round result
-IS the fixpoint).  The checkpoint knob (`operators/checkpoint.py`)
-must not change any result — only where round state is stored.
+IS the fixpoint).  A reliable checkpoint dir (`operators/checkpoint.py`)
+must not change any result — only where every lineage cut is stored.
 """
 
 from __future__ import annotations
@@ -121,32 +121,64 @@ def _with_checkpoint_dir(spark):
     return d
 
 
-def test_results_identical_under_reliable_checkpoint(spark):
-    """VERDICT_r9 #5: the checkpoint knob changes durability, never
-    values — LPA and k-core results must be bit-identical with and
-    without a reliable checkpoint dir configured."""
+def _graph_loops(spark, sf_dir, out_dir):
     edges = [(1, 2), (1, 3), (2, 3), (10, 11), (10, 12), (11, 12), (3, 10)] + [
         (20 + i, 21 + i) for i in range(5)
     ]
     e = spark.createDataFrame(sorted(edges), "u bigint, v bigint")
-    lpa_local = set(map(tuple, label_propagation(e).collect()))
-    kcore_local = set(map(tuple, kcore_peel(e, k=2).collect()))
+    return (
+        set(map(tuple, label_propagation(e).collect())),
+        set(map(tuple, kcore_peel(e, k=2).collect())),
+    )
+
+
+def _neardup_summary(spark, sf_dir, out_dir):
+    from bigdatamlteamrepo_spark.queries import QUERIES
+
+    return sorted(map(tuple, QUERIES["neardup_dedup_summary"](spark, sf_dir).collect()))
+
+
+def _corpus_build(spark, sf_dir, out_dir):
+    from bigdatamlteamrepo_spark.pipelines import build_training_corpus
+
+    res = build_training_corpus(spark, sf_dir, out_dir, n_shards=2)
+    return sorted(map(tuple, res["report"].collect()))
+
+
+@pytest.mark.parametrize(
+    "face",
+    [_graph_loops, _neardup_summary, _corpus_build],
+    ids=["graph_loops", "neardup_dedup_summary", "build_training_corpus"],
+)
+def test_results_identical_under_reliable_checkpoint(
+    spark, sf_dir, tmp_path, monkeypatch, face
+):
+    """A configured checkpoint dir changes durability, never values —
+    and it reaches EVERY lineage cut of the face: with the dir set,
+    any executor-local ``localCheckpoint`` raises, yet the results
+    equal local mode's."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    local = face(spark, sf_dir, str(tmp_path / "local"))
     d = _with_checkpoint_dir(spark)
     try:
-        assert (
-            spark.sparkContext.getCheckpointDir() is not None
-        ), "knob precondition"
-        lpa_rel = set(map(tuple, label_propagation(e).collect()))
-        kcore_rel = set(map(tuple, kcore_peel(e, k=2).collect()))
-        # the reliable path actually wrote checkpoint state
-        assert any(os.scandir(d)), "no reliable checkpoint files written"
+        assert spark.sparkContext.getCheckpointDir() is not None
+
+        def _no_local(self, eager=True):
+            raise AssertionError("localCheckpoint under a reliable checkpoint dir")
+
+        monkeypatch.setattr(DataFrame, "localCheckpoint", _no_local)
+        reliable = face(spark, sf_dir, str(tmp_path / "reliable"))
+        monkeypatch.undo()
+        # the reliable path actually wrote checkpointed RDDs
+        written = [n for _, dirs, _ in os.walk(d) for n in dirs if n.startswith("rdd-")]
+        assert written, "no reliable checkpoint files written"
     finally:
         # setCheckpointDir(None) resets (Scala Option(null) → None), so
         # the shared session fixture leaves this test local-mode again
         spark.sparkContext.setCheckpointDir(None)
         shutil.rmtree(d, ignore_errors=True)
-    assert lpa_rel == lpa_local
-    assert kcore_rel == kcore_local
+    assert reliable == local
 
 
 @pytest.mark.parametrize("sf", ALL_SFS)

@@ -138,9 +138,9 @@ def test_candidate_pairs_honor_subset_sets_with_cache_on(spark, sf_dir, cache_se
 
 
 def test_hll_ngrams_cached_equals_uncached(spark, sf_dir, cache_session):
-    """source_distinct_ngrams_hll takes a different plan with the cache
-    on (HLL over the collapsed gram table instead of the stream) —
-    registers are duplicate-insensitive, so values must be identical."""
+    """source_distinct_ngrams_hll shares only the tokenized-documents
+    prefix with the cache on; its gram stream and registers are the
+    cache-off plan, so values must be identical."""
     stagecache.disable()
     cold, cols = _rows(QUERIES["source_distinct_ngrams_hll"](spark, sf_dir))
     stagecache.enable()

@@ -298,14 +298,3 @@ def test_spans_match_brute_force_on_random_corpora(spark, docs):
         for r in dup_substring_spans(df, w=_W).collect()
     }
     assert got == _brute_spans(texts, _W)
-
-
-def test_prefilter_equals_unfiltered_plan(spark, sf_dir):
-    """r13 rewrite pin: the xxhash64-prefiltered plan (default) and the
-    r12 md5 window-count plan produce the identical span set on the
-    driver corpus — the prefilter is a lossless prune, not a different
-    dedup definition."""
-    docs = load_table(spark, sf_dir, "documents")
-    new = sorted(map(tuple, dup_substring_spans(docs).collect()))
-    old = sorted(map(tuple, dup_substring_spans(docs, prefilter=False).collect()))
-    assert new == old and len(new) > 0
