@@ -54,15 +54,14 @@ def has_ws_tokens(docs) -> bool:
 
 def ensure_tokens(docs, *keep: str):
     """``(keep..., toks)`` projection of a documents frame, REUSING an
-    existing provenance-tagged ``toks`` column when present (the session
-    stage cache's shared tokenize prefix — see
-    ``bigdatamlteamrepo_spark.stagecache``) and computing
+    existing provenance-tagged ``toks`` column when present (the
+    tokenize prefix ``text_dedup._with_tokens`` adds) and computing
     :func:`tokenize` from ``text`` otherwise.  A ``toks`` column WITHOUT
     the :data:`WS_TOKENS_META` marker is never reused — recompute (or an
     analysis error when ``text`` is also absent) beats silently adopting
-    a differently-derived tokenization.  With the cache off the plan is
+    a differently-derived tokenization.  Either way the plan is
     identical to inlining tokenize at the call site (Catalyst prunes the
-    projection either way)."""
+    projection)."""
     if has_ws_tokens(docs):
         return docs.select(*keep, "toks")
     return docs.select(*keep, ws_tokens("text"))

@@ -147,7 +147,6 @@ def segment_price_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customer_spend_ranks",
-    priority=90,
     oracle=f"""
 WITH spend AS (
   SELECT c_mktsegment, c_custkey,
@@ -434,7 +433,6 @@ def lineitem_flag_status_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "order_custkeys_intersect_all",
-    priority=90,
     oracle="""
 SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
 INTERSECT ALL
@@ -450,7 +448,6 @@ def order_custkeys_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "order_custkeys_except_all",
-    priority=90,
     oracle="""
 SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
 EXCEPT ALL
@@ -547,7 +544,7 @@ def events_value_median_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query("events_approx_stats", priority=90)
+@query("events_approx_stats")
 def events_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
@@ -593,7 +590,7 @@ def events_last_order_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query("sample_exact_100", priority=90)
+@query("sample_exact_100")
 def sample_exact_100(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdatamlteamrepo_spark.operators.sampling import sample_exact_n
 
@@ -603,7 +600,7 @@ def sample_exact_100(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("undersample_balanced_docs", priority=90)
+@query("undersample_balanced_docs")
 def undersample_balanced_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdatamlteamrepo_spark.functions.arrays import has_any_keyword
     from bigdatamlteamrepo_spark.functions.text import tokenize

@@ -75,7 +75,7 @@ from bigdatamlteamrepo_spark.operators.sketches import (
     bottomk_cutoff_sql,
     bottomk_prefilter,
 )
-from bigdatamlteamrepo_spark.queries.registry import PRI_NEW, query
+from bigdatamlteamrepo_spark.queries.registry import query
 from bigdatamlteamrepo_spark.queries.text_dedup import _TOKENS_SQL, _with_tokens
 
 #: passage width in tokens (matches queries/passages.py so the exact
@@ -443,15 +443,9 @@ def _doc_grams(docs: DataFrame) -> DataFrame:
 
 def _doc_grams_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """:func:`_doc_grams` stream over the sf_dir corpus (per-doc-DISTINCT
-    8-gram md5 rows) — shared by doc_ngram_novelty and the
-    source-overlap family when the stage cache is on, the same lazy
-    plan per query when it is off."""
-    from bigdatamlteamrepo_spark import stagecache
-
-    return stagecache.shared(
-        ("doc_grams8", sf_dir),
-        lambda: _doc_grams(_with_tokens(spark, sf_dir)),
-    )
+    8-gram md5 rows), the lazy plan doc_ngram_novelty and the
+    source-overlap family each build on."""
+    return _doc_grams(_with_tokens(spark, sf_dir))
 
 
 _GRAMS_CTE = f"""__gt AS (SELECT doc_id, source, {_TOKENS_SQL} AS toks FROM documents),
@@ -838,7 +832,6 @@ _OVA_SCHEMA = (
 
 @query(
     "source_overlap_audit",
-    priority=PRI_NEW,
     oracle=f"""
 WITH {_GRAMS_CTE},
 {_KMV_CTES},
@@ -906,7 +899,7 @@ def overlap_audit(
     if not pairs:
         return spark.createDataFrame([], _OVA_SCHEMA)
     srcs = sorted({r.source_a for r in pairs} | {r.source_b for r in pairs})
-    # _doc_grams is row-local, so filtering the cached gram stream by
+    # _doc_grams is row-local, so filtering the passed gram stream by
     # source equals computing grams over the filtered documents
     exact = overlap_matrix(
         docs.filter(F.col("source").isin(srcs)),
@@ -1123,7 +1116,7 @@ def source_distinct_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = ensure_tokens(_with_tokens(spark, sf_dir), "source")
     # one scan for all three widths: aggregate the three per-doc count
     # arithmetics together, then unpivot the 20-row result to (source,
-    # n) — the previous 3-way union scanned the (cached) token frame
+    # n) — the previous 3-way union scanned the token frame
     # three times for the same numbers (NOTES_r9, VERDICT_r8 #4)
     per_src = t.groupBy("source").agg(
         *[

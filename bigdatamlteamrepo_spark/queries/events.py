@@ -96,7 +96,6 @@ def events_sliding_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_props_stats",
-    priority=90,
     oracle="""
 SELECT event_type,
        CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k,
@@ -274,7 +273,6 @@ def events_type_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_hour_of_day_profile",
-    priority=90,
     oracle=f"""
 SELECT CAST(hour(ts) AS BIGINT) AS hour_of_day,
        event_type,
@@ -302,7 +300,6 @@ _HIST_WIDTH = 10.0
 
 @query(
     "events_value_histogram",
-    priority=90,
     oracle=f"""
 SELECT event_type,
        CAST(floor(value / {_HIST_WIDTH}) AS BIGINT) AS bucket,
@@ -329,7 +326,6 @@ def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_user_gap_stats",
-    priority=90,
     oracle="""
 WITH gaps AS (
   SELECT user_id,

@@ -518,7 +518,7 @@ QUALIFY rank <= {_ANN_K}
 """
 
 
-@query("ann_rp_lsh_topk", bench=True, priority=90, oracle=_ann_sketch_oracle())
+@query("ann_rp_lsh_topk", bench=True, oracle=_ann_sketch_oracle())
 def ann_rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return rp_lsh_topk(
@@ -583,7 +583,7 @@ QUALIFY rank <= {_ANN_K}
 """
 
 
-@query("ann_rp_lsh_banded_topk", priority=90, oracle=_ann_banded_oracle())
+@query("ann_rp_lsh_banded_topk", oracle=_ann_banded_oracle())
 def ann_rp_lsh_banded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdatamlteamrepo_spark.operators.similarity import rp_lsh_banded_topk
 
@@ -735,7 +735,7 @@ QUALIFY rank <= {_ANN_K}
 """
 
 
-@query("ann_voronoi_topk", oracle=_ann_voronoi_oracle(), priority=90)
+@query("ann_voronoi_topk", oracle=_ann_voronoi_oracle())
 def ann_voronoi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdatamlteamrepo_spark.operators.similarity import voronoi_topk
 
@@ -1064,7 +1064,7 @@ FROM __top t JOIN embeddings e ON e.vec_id = t.neighbor_id
 """
 
 
-@query("ann_pq_adc_topk", oracle=_ann_pq_oracle(), priority=90, bench=True)
+@query("ann_pq_adc_topk", oracle=_ann_pq_oracle(), bench=True)
 def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdatamlteamrepo_spark.operators.pq import pq_adc_topk
 
@@ -1187,7 +1187,7 @@ QUALIFY rank <= {_ANN_K}
 """
 
 
-@query("ann_ivfpq_topk", oracle=_ann_ivfpq_oracle(), priority=90)
+@query("ann_ivfpq_topk", oracle=_ann_ivfpq_oracle())
 def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdatamlteamrepo_spark.operators.pq import ivfpq_topk
 

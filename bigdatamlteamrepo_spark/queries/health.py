@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from bigdatamlteamrepo_spark.catalog import load_table
 from bigdatamlteamrepo_spark.functions.numeric import dsum, dsum_expr
 from bigdatamlteamrepo_spark.functions.text import tokenize
-from bigdatamlteamrepo_spark.queries.registry import PRI_EXTRA, query
+from bigdatamlteamrepo_spark.queries.registry import query
 from bigdatamlteamrepo_spark.queries.shards import MIX_ALPHA
 from bigdatamlteamrepo_spark.queries.text_dedup import _TOKENS_SQL
 
@@ -391,7 +391,7 @@ def unigram_divergence_against_ref(st: DataFrame, ref: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@query("doc_quality_model_scores", priority=PRI_EXTRA)
+@query("doc_quality_model_scores")
 def doc_quality_model_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the CCNet-style quality classifier (ml/quality.py: n-gram
     CountVectorizer + weighted LR on Gopher pseudo-labels) on the
@@ -403,9 +403,9 @@ def doc_quality_model_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     sensitive at the ULP level, so there is no cross-engine value
     oracle; the expression path is pinned ≡ the MLlib transform (and
     the model's holdout AUC floor asserted) in tests/test_ml_quality.py.
-    Registered at the demoted priority so it never occupies a driver
-    correctness-window slot (rows-only rows read as non-green — the
-    r03 ann_ivf_topk lesson)."""
+    Having no oracle, it sorts after every oracle-paired query, so it
+    never occupies a driver correctness-window slot (rows-only rows read
+    as non-green — the r03 ann_ivf_topk lesson)."""
     from bigdatamlteamrepo_spark.ml.quality import (
         holdout_split,
         score_documents_expr,

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdatamlteamrepo_spark.queries.registry import PRI_NEW, query
+from bigdatamlteamrepo_spark.queries.registry import query
 from bigdatamlteamrepo_spark.sources.multimodal import (
     decode_media_exact_stats,
     decode_media_stats,
@@ -297,7 +297,7 @@ SELECT * FROM img_stats UNION ALL SELECT * FROM aud_stats
 """
 
 
-@query("multimodal_decode_summary", oracle=_MM_DECODE_ORACLE, priority=PRI_NEW)
+@query("multimodal_decode_summary", oracle=_MM_DECODE_ORACLE)
 def multimodal_decode_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-kind EXACT-INTEGER decode summary over the real-codec media
     table — the multimodal tier's oracle-paired face (VERDICT_r6 #5).

@@ -367,11 +367,7 @@ def merge_windows_to_spans(
     )
 
 
-def dup_substring_spans(
-    docs: DataFrame,
-    w: int = SPAN_W,
-    cache_key: str | None = None,
-) -> DataFrame:
+def dup_substring_spans(docs: DataFrame, w: int = SPAN_W) -> DataFrame:
     """Maximal duplicated spans per document: every stride-1 w-token
     window occurring ≥2 times in the corpus, island-merged
     (:func:`merge_windows_to_spans`).
@@ -379,15 +375,8 @@ def dup_substring_spans(
     Returns (doc_id, source, span_start, span_end, span_tokens,
     n_windows) with 1-based inclusive token offsets.
 
-    ``cache_key`` (an sf_dir): the duplicated-window table is shared by
-    two registered faces (doc_dup_substring_spans,
-    substring_dedup_summary) — with the session stage cache on it
-    materializes once per corpus instead of once per query.  CONTRACT:
-    pass a cache_key ONLY when ``docs`` is exactly the full documents
-    table of that sf_dir — the key is not tied to the frame, so a
-    subset frame under a corpus key (or vice versa) would silently read
-    the other frame's windows.  Subset callers leave it None (the
-    default).
+    Windows are counted over ``docs`` alone, so a subset frame (the
+    corpus build's survivor slice) sees only its own duplicates.
 
     Plan (r13): counting the full md5 window stream
     shuffles+sorts O(corpus tokens) rows × (32-hex hash + ids) — the
@@ -414,15 +403,7 @@ def dup_substring_spans(
     no-md5-collision assumption the md5 design itself already makes
     (pinned vs the brute force in tests/test_substring_dedup.py, incl.
     collision-heavy random corpora)."""
-    from bigdatamlteamrepo_spark import stagecache
-
-    if cache_key is not None:
-        dw = stagecache.shared(
-            ("dup_windows", cache_key, w), lambda: _dup_windows(docs, w)
-        )
-    else:
-        dw = _dup_windows(docs, w)
-    return merge_windows_to_spans(dw, w)
+    return merge_windows_to_spans(_dup_windows(docs, w), w)
 
 
 def _dup_windows(docs: DataFrame, w: int) -> DataFrame:
@@ -570,7 +551,7 @@ def doc_dup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain hash equi-join (AQE broadcasts it at driver SFs); nothing
     references text after the first projection — only 32-char hashes
     and int offsets move."""
-    return dup_substring_spans(_with_tokens(spark, sf_dir), cache_key=sf_dir)
+    return dup_substring_spans(_with_tokens(spark, sf_dir))
 
 
 @query(
@@ -617,7 +598,7 @@ def substring_dedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_toks").cast("bigint").alias("total_tokens"),
     )
     cut = (
-        dup_substring_spans(docs, cache_key=sf_dir)
+        dup_substring_spans(docs)
         .groupBy("source")
         .agg(
             F.countDistinct("doc_id").cast("bigint").alias("n_docs_with_dup"),

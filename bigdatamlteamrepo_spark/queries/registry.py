@@ -72,14 +72,6 @@ PRI_GREEN_BASE = 40
 #: design; fully covered by the local pytest suite instead
 PRI_ROWS_ONLY = 90
 
-#: retained ONLY for call-site compatibility: window order is fully
-#: ledger-derived and these constants (like the decorator's
-#: ``priority`` argument) have NO effect on placement — do not pass
-#: them expecting to curate the window
-PRI_CORE = 50
-PRI_EXTRA = 90
-PRI_NEW = 30
-
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
@@ -127,13 +119,11 @@ def query(
     name: str,
     oracle: str | None = None,
     bench: bool = False,
-    priority: int = PRI_CORE,
 ):
     """Decorator registering a query (and optional oracle SQL / bench
     flag).  Window order is derived ENTIRELY from the correctness
-    ledger via :func:`window_priority`; the ``priority`` parameter is
-    accepted for call-site compatibility and IGNORED — rows-only
-    demotion and staleness rotation cannot be overridden by hand."""
+    ledger via :func:`window_priority` — rows-only demotion and
+    staleness rotation cannot be overridden by hand."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:

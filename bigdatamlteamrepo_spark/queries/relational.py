@@ -207,7 +207,6 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customer_order_stats",
-    priority=90,
     oracle=f"""
 SELECT c_custkey, c_name, c_mktsegment,
        COUNT(*) AS n_orders,
@@ -282,7 +281,6 @@ def top_orders_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customers_without_orders",
-    priority=90,
     oracle="""
 SELECT c_custkey, c_name
 FROM customer
@@ -399,7 +397,6 @@ def order_priority_status_crosstab(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query(
     "nation_region_customer_counts",
-    priority=90,
     oracle=f"""
 SELECT r_name, n_name,
        COUNT(*) AS n_customers,
@@ -545,7 +542,6 @@ def q18_large_volume_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_monthly_volume",
-    priority=90,
     oracle=f"""
 SELECT CAST(year(o_orderdate) AS BIGINT) AS order_year,
        CAST(month(o_orderdate) AS BIGINT) AS order_month,
@@ -703,7 +699,6 @@ def lineitem_flag_distincts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q4_order_priority_checking",
-    priority=90,
     oracle="""
 SELECT o_orderpriority, COUNT(*) AS n_orders
 FROM orders
@@ -743,7 +738,6 @@ def q4_order_priority_checking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q16_parts_supplier_counts",
-    priority=90,
     oracle="""
 SELECT p_brand, p_type, p_size,
        COUNT(DISTINCT l_suppkey) AS supplier_cnt

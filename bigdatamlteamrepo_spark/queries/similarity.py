@@ -95,7 +95,6 @@ def embedding_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_label_centroids",
-    priority=90,
     oracle="""
 WITH e AS (
   SELECT label, unnest(embedding) AS v,

@@ -19,12 +19,9 @@ Scale notes:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bigdatamlteamrepo_spark import stagecache
 from bigdatamlteamrepo_spark.catalog import load_table
 from bigdatamlteamrepo_spark.functions.arrays import first_match_category, has_any_keyword
 from bigdatamlteamrepo_spark.functions.text import (
@@ -52,15 +49,9 @@ _TOKENS_SQL = "string_split_regex(lower(text), '\\s+')"
 
 
 def _with_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents + toks — THE tokenize prefix of the text tier.
-    Session-cached when the stage cache is enabled (bench harness /
-    interactive audits); the default is the lazy per-query plan."""
-    return stagecache.shared(
-        ("doc_tokens", sf_dir),
-        lambda: load_table(spark, sf_dir, "documents").select(
-            "*", ws_tokens("text")
-        ),
-    )
+    """documents + toks — THE tokenize prefix of the text tier (a lazy
+    plan; each query face that reads it runs its own scan)."""
+    return load_table(spark, sf_dir, "documents").select("*", ws_tokens("text"))
 
 
 # --------------------------------------------------------------------------
@@ -263,7 +254,6 @@ _WINNOW_W = 4
 
 @query(
     "doc_winnowing_fingerprints",
-    priority=90,
     oracle=f"""
 WITH h AS (
   SELECT doc_id,
@@ -972,7 +962,6 @@ def lsh_candidate_pairs(
     n_hashes: int = LSH_N_HASHES,
     n_bands: int = LSH_N_BANDS,
     sets: DataFrame | None = None,
-    corpus_sets: bool = False,
     salt: str | None = "auto",
 ) -> DataFrame:
     """Distinct candidate pairs (doc_a < doc_b) sharing ≥1 MinHash band.
@@ -990,11 +979,8 @@ def lsh_candidate_pairs(
     equals MinHash over the raw shingle list (duplicates never change a
     min), so the candidate set — and the oracle — is unchanged.
 
-    ``corpus_sets``: set True ONLY when ``sets`` is the FULL sf_dir
-    corpus shingle frame — it permits substituting the session stage
-    cache's materialized band table.  A subset ``sets`` (batch/survivor
-    slices) must leave it False, or the cached full-corpus bands would
-    silently replace the subset's.
+    Candidates come only from the docs of ``sets``: a batch or
+    survivor slice yields pairs inside that slice.
 
     ``salt="auto"`` (the DEFAULT, VERDICT_r8 #8): boilerplate corpora
     concentrate docs into a few band buckets, and the self-join then
@@ -1026,17 +1012,10 @@ def lsh_candidate_pairs(
     # materialized partitions.  With salt=None the self-join IS the
     # first consumer and its two concurrently-scheduled scan stages
     # could each compute the unmaterialized signature chain — keep the
-    # eager copy there.  A full-corpus band table is shared across
-    # queries when the session stage cache is on.
-    def build() -> DataFrame:
-        return lsh_band_rows(df, shingle_col, n_hashes, n_bands)
-
-    if sets is None or corpus_sets:
-        bands = stagecache.materialized(
-            ("lsh_bands", sf_dir, n_hashes, n_bands), build, eager=salt is None
-        )
-    else:
-        bands = truncate(build(), eager=salt is None)
+    # eager copy there.
+    bands = truncate(
+        lsh_band_rows(df, shingle_col, n_hashes, n_bands), eager=salt is None
+    )
 
     def _pairs(frame: DataFrame) -> DataFrame:
         a, b = frame.alias("a"), frame.alias("b")
@@ -1066,7 +1045,7 @@ def lsh_candidate_pairs(
     # hot keys are FEW by construction (≤ |band rows| / thr), so the
     # split is a broadcast membership mark — the band table itself
     # never shuffles against the width table.  bands is materialized
-    # (truncate / stage cache), so building the broadcast side
+    # (truncate), so building the broadcast side
     # re-runs only the small width agg, not the signature chain.
     hot_keys = widths.filter(F.col("__w") > thr).select(
         "band", F.lit(True).alias("__hot")
@@ -1222,17 +1201,14 @@ def doc_shingle_sets(docs: DataFrame) -> DataFrame:
     )
 
 
-def _shingle_stage(
-    spark: SparkSession, sf_dir: str
-) -> tuple[tuple, Callable[[], DataFrame]]:
-    """(stage-cache key, builder) of :func:`doc_shingle_sets` over the
-    sf_dir corpus.  :func:`_shingle_sets` runs it through
-    ``stagecache.shared``; the faces that read the sets more than once
-    run it through ``stagecache.materialized(..., eager=False)``: with
-    the cache off that is a LAZY cut whose first consuming job fills it
-    (in every such face that first job is sequential — the band-width
-    collect, a band cut, or a single-reference plan), so no dedicated
-    materialization barrier runs (r13; interleaved A/B inside
+def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`doc_shingle_sets` over the sf_dir corpus (a lazy plan).
+
+    The faces that read the sets more than once cut it with
+    ``truncate(..., eager=False)``: a LAZY cut whose first consuming
+    job fills it (in every such face that first job is sequential — the
+    band-width collect, a band cut, or a single-reference plan), so no
+    dedicated materialization barrier runs (r13; interleaved A/B inside
     neardup_dedup_summary: med 2.78 → 2.61 s, min flat).
 
     Deliberately NO repartition before the tokenize → shingle chain:
@@ -1242,16 +1218,7 @@ def _shingle_stage(
     doc_shared_shingle_stats); at real scale the file layout provides
     the splits and the shuffle would be pure overhead.
     """
-    return ("shingle_sets", sf_dir), lambda: doc_shingle_sets(
-        _with_tokens(spark, sf_dir)
-    )
-
-
-def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """:func:`doc_shingle_sets` over the sf_dir corpus: the lazy plan
-    with the stage cache off, the session's shared persisted frame
-    with it on."""
-    return stagecache.shared(*_shingle_stage(spark, sf_dir))
+    return doc_shingle_sets(_with_tokens(spark, sf_dir))
 
 
 def _pair_jaccard(
@@ -1298,8 +1265,8 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # evidence and cannot discriminate (measured 0-1% candidate
     # reduction at any safe threshold — see SCALING.md "b-bit verify
     # prefilter" and :func:`bbit_prefilter`).
-    sets = stagecache.materialized(*_shingle_stage(spark, sf_dir), eager=False)
-    cand = lsh_candidate_pairs(spark, sf_dir, sets=sets, corpus_sets=True)
+    sets = truncate(_shingle_sets(spark, sf_dir), eager=False)
+    cand = lsh_candidate_pairs(spark, sf_dir, sets=sets)
     return _pair_jaccard(cand, sets, _JACCARD_MIN, materialize=False)
 
 
@@ -1366,12 +1333,8 @@ def neardup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose exact shingle Jaccard with an index document is ≥ 0.5,
     candidates generated by the band equi-join (never n×m).
     """
-    sets = stagecache.materialized(*_shingle_stage(spark, sf_dir), eager=False)
-    bands = stagecache.materialized(
-        ("lsh_bands", sf_dir, LSH_N_HASHES, LSH_N_BANDS),
-        lambda: lsh_band_rows(sets, F.col("s")),
-        eager=True,
-    )
+    sets = truncate(_shingle_sets(spark, sf_dir), eager=False)
+    bands = truncate(lsh_band_rows(sets, F.col("s")), eager=True)
     is_new = F.col("doc_id") % _INCR_MOD == 0
     cand = (
         bands.filter(is_new)
@@ -1438,7 +1401,7 @@ def doc_shared_shingle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same shuffle key with one explode and one exchange (r12,
     # guide §2.3/§2.4; measured at sf0.1: 1.03 → 0.81 s min,
     # 1.13 → 0.87 s median, noop sink min-of-5)
-    sets = stagecache.materialized(*_shingle_stage(spark, sf_dir), eager=False)
+    sets = truncate(_shingle_sets(spark, sf_dir), eager=False)
     ex = sets.select("doc_id", F.explode("s").alias("g"))
     nd = F.count(F.lit(1)).over(Window.partitionBy("g"))
     shared = F.sum(F.when(F.col("nd") > 1, 1).otherwise(0)).cast("long")
@@ -1524,10 +1487,8 @@ def bbit_minhash_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compressed-signature tier (module comment above).  One
     signature aggregation feeds both the banding (candidates) and the
     2-bit agreement join; only (doc_id, 24 longs) rows shuffle."""
-    sig = stagecache.materialized(
-        ("uh_signatures", sf_dir, LSH_N_HASHES),
-        lambda: uh_signature_frame(_shingle_sets(spark, sf_dir), F.col("s")),
-        eager=True,
+    sig = truncate(
+        uh_signature_frame(_shingle_sets(spark, sf_dir), F.col("s")), eager=True
     )
     from bigdatamlteamrepo_spark.functions.text import band_keys
 
@@ -1618,8 +1579,8 @@ def bbit_independent_agreement_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     symbolically and counts equalities — a hash match pins the hash
     family, the bit-plane packing, and the popcount identity
     ``n_agree = 128 - popcount((p^p')|(q^q'))`` in one check."""
-    sets = stagecache.materialized(*_shingle_stage(spark, sf_dir), eager=False)
-    cand = lsh_candidate_pairs(spark, sf_dir, sets=sets, corpus_sets=True)
+    sets = truncate(_shingle_sets(spark, sf_dir), eager=False)
+    cand = lsh_candidate_pairs(spark, sf_dir, sets=sets)
     sk = bbit_sketch_frame(sets, F.col("s"))
     return bbit_independent_agreement(cand, sk)
 

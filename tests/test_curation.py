@@ -578,7 +578,7 @@ def test_tagged_gram_hashes_distinct_before_hash(spark):
 
 def test_tagged_gram_hex_string_matches_int_counts(spark):
     """r13 pin: distinct/grouped counts over the 15-hex STRING gram key
-    (as_int=False, the exact face's cache-off form) equal counts over
+    (as_int=False, the exact face's form) equal counts over
     the BIGINT form — the hex→int map is a bijection, so the key type
     cannot change any count."""
     from bigdatamlteamrepo_spark.queries.curation import _tagged_gram_hashes

@@ -231,6 +231,28 @@ def test_lsh_candidates_same_from_raw_or_sets(spark, sf_dir):
     assert raw == from_sets
 
 
+def test_lsh_candidates_from_subset_sets_stay_in_subset(spark, sf_dir):
+    # a batch/survivor slice of the shingle sets yields exactly the
+    # corpus candidates whose two docs both lie in the slice — never
+    # the full corpus's bands
+    from bigdatamlteamrepo_spark.queries.text_dedup import (
+        _shingle_sets,
+        lsh_candidate_pairs,
+    )
+
+    full = {
+        (r.doc_a, r.doc_b) for r in lsh_candidate_pairs(spark, sf_dir).collect()
+    }
+    subset = _shingle_sets(spark, sf_dir).filter(F.col("doc_id") % 3 == 0)
+    got = {
+        (r.doc_a, r.doc_b)
+        for r in lsh_candidate_pairs(spark, sf_dir, sets=subset).collect()
+    }
+    want = {(a, b) for a, b in full if a % 3 == 0 and b % 3 == 0}
+    assert want and len(want) < len(full)
+    assert got == want
+
+
 def test_neardup_plans_have_no_cartesian(spark, sf_dir):
     from bigdatamlteamrepo_spark.queries import QUERIES
 
@@ -450,7 +472,7 @@ def test_bbit_independent_prefilter_lossless_on_driver_corpus(spark, sf_dir):
     )
 
     sets = _shingle_sets(spark, sf_dir)
-    cand = lsh_candidate_pairs(spark, sf_dir, sets=sets, corpus_sets=True)
+    cand = lsh_candidate_pairs(spark, sf_dir, sets=sets)
     want = {(r.doc_a, r.doc_b) for r in cand.collect()}
     sk = bbit_sketch_frame(sets, "s")
     kept = {

@@ -113,7 +113,7 @@ def main() -> None:
     print(f"\n== driver corpus ({sf_dir}) ==")
     dsets = _shingle_sets(spark, sf_dir).persist()
     dsets.count()
-    dcand = lsh_candidate_pairs(spark, sf_dir, sets=dsets, corpus_sets=True)
+    dcand = lsh_candidate_pairs(spark, sf_dir, sets=dsets)
     dcand = dcand.persist()
     n_cand = dcand.count()
 

@@ -23,7 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bigdatamlteamrepo_spark import get_spark, stagecache
+from bigdatamlteamrepo_spark import get_spark
 from bigdatamlteamrepo_spark.plans.checks import formatted_plan
 from bigdatamlteamrepo_spark.queries import BENCH_SET, QUERIES
 
@@ -57,7 +57,6 @@ def main() -> None:
 
     extra = dict(kv.split("=", 1) for kv in args.conf)
     spark = get_spark(app_name="opt-probe-r12", extra_conf=extra or None)
-    stagecache.disable()
     sc = spark.sparkContext
 
     if args.plans_suffix:

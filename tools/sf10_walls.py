@@ -57,7 +57,7 @@ def main() -> None:
         rec = {"query": name}
         for label, d in (("sf1", sf1_dir), ("sf10", SF10_DIR)):
             # cold session per cell, engine conf (16g driver — the
-            # NOTES_r17 OOM lesson), stage cache off; full collect()
+            # NOTES_r17 OOM lesson); full collect()
             # (count() lets Catalyst prune cardinality-neutral
             # subtrees, see tools/sf1_scaling.py)
             spark = get_spark(app_name=f"sf10-{name}-{label}")

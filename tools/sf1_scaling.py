@@ -26,7 +26,7 @@ modifying /root/testdata):
   artificial near-dups on every doc and turn the candidate-verify
   stage into a different workload.
 
-Then each headliner runs COLD (fresh stage-cache-off session) at
+Then each headliner runs COLD (fresh session) at
 sf0.1 and sf1, wall time and the physical plan's Exchange count are
 recorded, and a SCALING.md section is appended.  Pass/fail lens:
 wall growth ≤ ~10× at 10× data and an UNCHANGED exchange count (a new
@@ -486,7 +486,7 @@ def append_scaling_md(rows: list[dict]) -> None:
         "composed from a phrase pool sized to match the measured",
         "repeated-15-token-window rate, exact dups planted at the measured",
         "rate).  Each cell is a COLD full-collect() in its own warmed",
-        "session, stage cache off (count() is NOT a valid timing action:",
+        "session (count() is NOT a valid timing action:",
         "Catalyst eliminates cardinality-neutral left-join subtrees under",
         "it, which 'measured' substring dedup at 0.7 s by skipping the",
         "entire dup-span computation).  `Δexch` compares the physical",
