@@ -242,10 +242,3 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     """Load several tables as a dict of DataFrames."""
     return {n: load_table(spark, sf_dir, n) for n in (names or TABLE_SCHEMAS)}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` works on the
-    same names the DuckDB oracle uses."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

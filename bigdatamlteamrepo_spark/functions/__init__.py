@@ -9,8 +9,6 @@ from bigdatamlteamrepo_spark.functions.numeric import dsum, davg, dsum_expr, dav
 from bigdatamlteamrepo_spark.functions.text import (
     tokenize,
     shingles,
-    minhash_value,
-    token_stats_cols,
 )
 from bigdatamlteamrepo_spark.functions.vectors import dot, l2_norm, cosine_similarity
 from bigdatamlteamrepo_spark.functions.arrays import (
@@ -27,8 +25,6 @@ __all__ = [
     "davg_expr",
     "tokenize",
     "shingles",
-    "minhash_value",
-    "token_stats_cols",
     "dot",
     "l2_norm",
     "cosine_similarity",

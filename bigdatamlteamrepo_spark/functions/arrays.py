@@ -64,9 +64,3 @@ def multi_hot_columns(
 ) -> dict[str, Column]:
     """One 0/1 column per category (``is_{cat}``), MLP.ipynb:c7:27-39."""
     return {f"{prefix}{name}": has_any_keyword(arr, kws) for name, kws in categories.items()}
-
-
-def in_list_sql(arr_sql: str, keywords: Sequence[str]) -> str:
-    """DuckDB twin of :func:`has_any_keyword` over a list expression."""
-    lits = ", ".join(f"'{k}'" for k in keywords)
-    return f"(CASE WHEN list_has_any({arr_sql}, [{lits}]) THEN 1 ELSE 0 END)"

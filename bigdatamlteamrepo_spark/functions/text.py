@@ -1,14 +1,17 @@
-"""Text-analysis expressions: tokenization, shingling, MinHash, quality
-stats.  All pure ``Column`` expressions (no UDFs) so they vectorize in
-whole-stage codegen and scale linearly with input partitions.
+"""Text-analysis expressions: tokenization, shingling, and the MinHash
+universal-hash constants and band keys.  All pure ``Column`` expressions
+(no UDFs) so they vectorize in whole-stage codegen and scale linearly
+with input partitions.
 
-MinHash design (dedup at 100 TB): a MinHash value for seed *s* is
-``min(md5(s || '|' || shingle))`` over a document's w-token shingles.
-md5 is available (and identical) in Spark, DuckDB, and virtually every
-engine, so signatures are portable and the whole pipeline —
-signature → band key → bucket self-join — is expressible as plain SQL
-(and therefore oracle-checkable), while remaining a pure shuffle-join
-workload on a cluster: no driver state, no UDFs.
+MinHash design (dedup at 100 TB): each shingle is digested once with
+md5, and the digest's first two 32-bit words feed per-seed universal
+hashes (:func:`uh_constants`); the signature is the per-seed minimum
+(``text_dedup.uh_signature_frame``).  md5 and BIGINT arithmetic are
+available (and identical) in Spark, DuckDB, and virtually every engine,
+so signatures are portable and the whole pipeline — signature → band
+key → bucket self-join — is expressible as plain SQL (and therefore
+oracle-checkable), while remaining a pure shuffle-join workload on a
+cluster: no driver state, no UDFs.
 """
 
 from __future__ import annotations
@@ -88,29 +91,6 @@ def shingles(tokens: Column, w: int = 3) -> Column:
     )
 
 
-def minhash_values(shingles_col: Column, n_seeds: int) -> Column:
-    """All n MinHash values in ONE sequential fold over the shingles —
-    the shingle array is materialized once per row instead of once per
-    seed (25% faster than n separate array_min/transform passes at
-    sf0.1).  Returns array<string>[n_seeds]; requires ≥1 shingle
-    (callers filter size ≥ w first).
-
-    Init sentinel U+FFFF sorts above every hex digest, so it never
-    survives a non-empty fold.
-    """
-    init = F.array(*[F.lit("￿") for _ in range(n_seeds)])
-    return F.aggregate(
-        shingles_col,
-        init,
-        lambda acc, s: F.array(
-            *[
-                F.least(F.get(acc, i), F.md5(F.concat(F.lit(f"{i}|"), s)))
-                for i in range(n_seeds)
-            ]
-        ),
-    )
-
-
 #: modulus for word-derived minhash values (32-bit universal hashing)
 UH_MOD = 2**32
 
@@ -140,48 +120,6 @@ def uh_constants(n_seeds: int, seed: int = 1337) -> list[tuple[int, int, int]]:
     ]
 
 
-def minhash_values_fast(shingles_col: Column, n_seeds: int) -> Column:
-    """All n MinHash values with ONE md5 per shingle → array<long>.
-
-    The portable scheme (:func:`minhash_values`) pays n_seeds md5 calls
-    per shingle — the dominant cost of the whole dedup tier (measured
-    ~16× the rest of the signature work at 16 seeds).  Here each
-    shingle is digested once; the digest's first two 32-bit words feed
-    per-seed universal hashes (:func:`uh_constants`), so extra seeds
-    cost two multiplies each instead of an md5.  Still fully
-    SQL-portable: hex-substring word extraction and BIGINT arithmetic
-    behave identically in DuckDB.
-
-    Two materialized passes (hex digests, then word structs) keep each
-    md5/conv evaluated exactly once — folding directly over shingles
-    would duplicate the conv subtree into every seed's expression.
-    """
-    hexes = F.transform(shingles_col, F.md5)
-    words = F.transform(
-        hexes,
-        lambda h: F.struct(
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("long").alias("w1"),
-            F.conv(F.substring(h, 9, 8), 16, 10).cast("long").alias("w2"),
-        ),
-    )
-    consts = uh_constants(n_seeds)
-    init = F.array(*[F.lit(UH_MOD).cast("long") for _ in range(n_seeds)])
-    return F.aggregate(
-        words,
-        init,
-        lambda acc, w: F.array(
-            *[
-                F.least(
-                    F.get(acc, i),
-                    (F.lit(a) * w["w1"] + F.lit(b) * w["w2"] + F.lit(c))
-                    % F.lit(UH_MOD),
-                )
-                for i, (a, b, c) in enumerate(consts)
-            ]
-        ),
-    )
-
-
 def band_keys(mh_col: Column, n_hashes: int, n_bands: int) -> Column:
     """LSH band keys from a MinHash signature array → array<string>[n_bands].
 
@@ -201,39 +139,11 @@ def band_keys(mh_col: Column, n_hashes: int, n_bands: int) -> Column:
                 F.concat(
                     F.lit(f"{b}#"),
                     # explicit string cast so long-valued signatures
-                    # (minhash_values_fast) key identically to the
-                    # oracle's CAST(... AS VARCHAR) concatenation
+                    # (text_dedup.uh_signature_frame) key identically to
+                    # the oracle's CAST(... AS VARCHAR) concatenation
                     *[F.get(mh_col, b * r + j).cast("string") for j in range(r)],
                 )
             )
             for b in range(n_bands)
         ]
     )
-
-
-def minhash_value(shingles_col: Column, seed: int) -> Column:
-    """MinHash for one seed: lexicographic min of seeded md5 over shingles.
-
-    Returns NULL for an empty shingle set.
-    """
-    hashed = F.transform(
-        shingles_col, lambda s: F.md5(F.concat(F.lit(f"{seed}|"), s))
-    )
-    return F.array_min(hashed)
-
-
-def token_stats_cols(text_col: str = "text") -> dict[str, Column]:
-    """Per-row token statistics used by the quality-score queries.
-
-    Double divisions of integer-derived values are bit-deterministic
-    (same inputs → same IEEE result in any engine), so these compare
-    exactly against the oracle with no rounding.
-    """
-    toks = tokenize(text_col)
-    n = F.size(toks)
-    uniq = F.size(F.array_distinct(toks))
-    return {
-        "n_tokens": n,
-        "n_unique_tokens": uniq,
-        "type_token_ratio": uniq.cast("double") / n.cast("double"),
-    }

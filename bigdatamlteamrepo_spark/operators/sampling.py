@@ -166,7 +166,6 @@ def select_top_fraction(
     df: DataFrame,
     score_col: str,
     top_frac: float,
-    approx: bool = False,
 ) -> DataFrame:
     """Keep the rows whose ``score_col`` is ≥ the ``1 - top_frac``
     quantile — quantile-threshold selection, the scale-safe form of
@@ -178,5 +177,5 @@ def select_top_fraction(
     selected fraction can exceed ``top_frac`` on plateaued scores —
     deterministic and engine-independent, unlike any tie-breaking rank.
     """
-    thr = score_threshold(df, score_col, top_frac, approx=approx)
+    thr = score_threshold(df, score_col, top_frac)
     return df.filter(F.col(score_col) >= thr)

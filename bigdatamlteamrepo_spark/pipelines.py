@@ -55,7 +55,6 @@ def build_training_corpus(
     quality_model=None,
     quality_threshold: float | None = None,
     quality_top_frac: float | None = None,
-    quality_approx: bool = False,
     assign_splits: bool = False,
 ) -> dict[str, DataFrame]:
     """Run the full build; write shards to ``out_dir``; return
@@ -87,10 +86,9 @@ def build_training_corpus(
     decon survivor through the pure-expression path (broadcast
     (term, weight) join — no vectors at corpus scale) and keep docs
     with ``quality_prob >= quality_threshold``, or the top fraction by
-    score via quantile-threshold selection
-    (operators/sampling.select_top_fraction; ``quality_approx=True``
-    switches the cut to one-pass ``approx_percentile`` — the 100 TB
-    path).  ``quality_model`` accepts a prefit
+    score via exact quantile-threshold selection
+    (operators/sampling.select_top_fraction).  ``quality_model``
+    accepts a prefit
     :class:`~bigdatamlteamrepo_spark.ml.quality.QualityModel`; by
     default one is trained on the RAW input corpus — the Gopher
     pseudo-labels are degenerate on post-Gopher survivors (all
@@ -250,9 +248,7 @@ def build_training_corpus(
         if quality_threshold is not None:
             q_keep = scores.filter(F.col("quality_prob") >= quality_threshold)
         else:
-            q_keep = select_top_fraction(
-                scores, "quality_prob", quality_top_frac, approx=quality_approx
-            )
+            q_keep = select_top_fraction(scores, "quality_prob", quality_top_frac)
         s375 = checkpoint.truncate(
             s35.join(q_keep.select("doc_id"), "doc_id", "left_semi")
         )

@@ -48,10 +48,6 @@ def broadcast_join_count(df: DataFrame) -> int:
     return physical_plan(df).count("BroadcastHashJoin")
 
 
-def sort_merge_join_count(df: DataFrame) -> int:
-    return physical_plan(df).count("SortMergeJoin")
-
-
 def has_whole_stage_codegen(df: DataFrame) -> bool:
     """Check the *final* adaptive plan — AQE hides codegen annotation
     until the plan executes, so trigger a cheap action first.  Codegen

@@ -152,7 +152,6 @@ def _passage_sets(docs: DataFrame) -> DataFrame:
 def passage_neardup_doc_pairs(
     docs: DataFrame,
     max_bucket: int | str | None = "auto",
-    materialize: bool = True,
 ) -> DataFrame:
     """Core of :func:`passage_neardup_pairs` over any (doc_id, text)
     frame — separated so property tests can drive generated corpora.
@@ -178,25 +177,17 @@ def passage_neardup_doc_pairs(
     explicitly; ``None`` disables it (lossless all-pairs — bounded
     corpora only).
 
-    ``materialize``: the default materializes the shared passage-set
-    and band stages as LAZY lineage cuts (``truncate``) — the
-    auto-cap's bounded collect is the first action and fills both in
-    one job, where the r12 persist + eager-output chain paid separate
-    fill and copy barriers (r13; interleaved A/B at sf0.1:
-    1.97 → 1.75 s min, 2.10 → 1.88 s med, value-identical).
+    The shared passage-set and band stages are LAZY lineage cuts
+    (``truncate``) — the auto-cap's bounded collect is the first action
+    and fills both in one job, where the r12 persist + eager-output
+    chain paid separate fill and copy barriers (r13; interleaved A/B at
+    sf0.1: 1.97 → 1.75 s min, 2.10 → 1.88 s med, value-identical).
     Checkpointed blocks are released by the ContextCleaner when the
     returned frame is dropped (the graph-operator discipline), so
     repeated invocations still cannot accumulate unbounded executor
-    storage.  ``materialize=False``
-    builds the fully lazy plan (no checkpoints, the shingle subtree is
-    simply evaluated per consumer) — the form the plan-gate tests
-    inspect.
+    storage.
     """
-
-    def _keep(df: DataFrame) -> DataFrame:
-        return truncate(df, eager=False) if materialize else df
-
-    psets = _keep(_passage_sets(docs))
+    psets = truncate(_passage_sets(docs), eager=False)
 
     ex = psets.select("doc_id", "pi", F.explode("s").alias("sh"))
     hx = F.md5("sh")
@@ -217,12 +208,13 @@ def passage_neardup_doc_pairs(
         ]
     )
     mh = F.array(*[F.col(f"m{i}") for i in range(_P_HASHES)])
-    bands = _keep(
+    bands = truncate(
         sig.select(
             "doc_id",
             "pi",
             F.explode(band_keys(mh, _P_HASHES, _P_BANDS)).alias("band"),
-        )
+        ),
+        eager=False,
     )
 
     if max_bucket is not None:
@@ -231,41 +223,20 @@ def passage_neardup_doc_pairs(
         bw = bands.groupBy("band").agg(F.count(F.lit(1)).alias("w"))
         if max_bucket == "auto":
             # cap = max(floor, mult × (Σw div nb)) — pure bigint, so the
-            # oracle mirrors it tie-free.  Materialized path: collect
-            # the 1-ROW stat (the engine's bounded-collect convention —
-            # this also fills the psets/bands checkpoints in one cheap
-            # job; the broadcast formulation instead re-ran the whole
-            # signature chain inside the broadcast-exchange job,
-            # measured +1.9 s at sf0.1).  bw itself recomputes from the
-            # checkpointed band table for the semi side — one small agg,
-            # cheaper than keeping a third materialized frame (r13
-            # probe).  Lazy path keeps the collect-free 1-row broadcast
-            # so plan gates see a pure plan.
-            if materialize:
-                tot, nb = bw.agg(F.sum("w"), F.count(F.lit(1))).first()
-                cap = max(
-                    _AUTO_CAP_FLOOR,
-                    _AUTO_CAP_MULT * ((tot or 0) // max(nb, 1)),
-                )
-                ok = bw.filter(F.col("w") <= cap).select("band")
-            else:
-                stats = bw.agg(
-                    F.greatest(
-                        F.lit(_AUTO_CAP_FLOOR).cast("long"),
-                        F.coalesce(
-                            F.lit(_AUTO_CAP_MULT)
-                            * F.expr(
-                                "sum(w) div greatest(count(1), 1L)"
-                            ).cast("long"),
-                            F.lit(_AUTO_CAP_FLOOR).cast("long"),
-                        ),
-                    ).alias("cap")
-                )
-                ok = (
-                    bw.crossJoin(F.broadcast(stats))
-                    .filter(F.col("w") <= F.col("cap"))
-                    .select("band")
-                )
+            # oracle mirrors it tie-free.  Collect the 1-ROW stat (the
+            # engine's bounded-collect convention — this also fills the
+            # psets/bands checkpoints in one cheap job; a broadcast
+            # formulation instead re-ran the whole signature chain
+            # inside the broadcast-exchange job, measured +1.9 s at
+            # sf0.1).  bw itself recomputes from the checkpointed band
+            # table for the semi side — one small agg, cheaper than
+            # keeping a third materialized frame (r13 probe).
+            tot, nb = bw.agg(F.sum("w"), F.count(F.lit(1))).first()
+            cap = max(
+                _AUTO_CAP_FLOOR,
+                _AUTO_CAP_MULT * ((tot or 0) // max(nb, 1)),
+            )
+            ok = bw.filter(F.col("w") <= cap).select("band")
         else:
             ok = bw.filter(F.col("w") <= max_bucket).select("band")
         bands = bands.join(ok, "band", "left_semi")
@@ -312,12 +283,10 @@ def passage_neardup_doc_pairs(
         F.count(F.lit(1)).cast("bigint").alias("n_passage_pairs"),
         F.max("jac").alias("max_jaccard"),
     )
-    if materialize:
-        # lazy checkpoint of the doc-pair-sized result: the caller's
-        # first action materializes it (severing lineage back into the
-        # corpus-sized stages); repeated consumption reuses it
-        out = truncate(out, eager=False)
-    return out
+    # lazy checkpoint of the doc-pair-sized result: the caller's first
+    # action materializes it (severing lineage back into the corpus-sized
+    # stages); repeated consumption reuses it
+    return truncate(out, eager=False)
 
 
 def _passage_lsh_ctes() -> str:
@@ -570,26 +539,23 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def overlap_matrix(
     docs: DataFrame,
-    materialize: bool = True,
     grams: DataFrame | None = None,
 ) -> DataFrame:
     """Core of :func:`source_overlap_matrix` over any (doc_id, source,
     text) frame — separated so property tests can drive generated
     corpora.
 
-    ``materialize`` (default): the distinct (source, gram) table is
-    persisted for its three consumers (totals + both join sides), the
-    n_sources²-bounded output is materialized, and the corpus-sized
-    cache released (the operators/dedup.py discipline — repeated
-    invocations must not accumulate executor storage).
-    ``materialize=False`` builds the fully lazy plan for plan gates."""
+    The distinct (source, gram) table is persisted for its three
+    consumers (totals + both join sides), the n_sources²-bounded output
+    is materialized, and the corpus-sized cache released (the
+    operators/dedup.py discipline — repeated invocations must not
+    accumulate executor storage)."""
     sg = (
         (grams if grams is not None else _doc_grams(docs))
         .select("source", "g")
         .distinct()
+        .persist()
     )
-    if materialize:
-        sg = sg.persist()
     tot = sg.groupBy("source").agg(F.count(F.lit(1)).alias("n_grams"))
     a = sg.select(F.col("source").alias("source_a"), "g")
     b = sg.select(F.col("source").alias("source_b"), "g")
@@ -611,9 +577,8 @@ def overlap_matrix(
             "containment"
         ),
     )
-    if materialize:
-        out = truncate(out)
-        sg.unpersist()
+    out = truncate(out)
+    sg.unpersist()
     return out
 
 
@@ -719,12 +684,12 @@ def source_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def overlap_kmv(
     docs: DataFrame,
-    materialize: bool = True,
     grams: DataFrame | None = None,
 ) -> DataFrame:
     """Core of :func:`source_overlap_kmv` over any (doc_id, source,
     text) frame — separated so the error-bound tests can drive
-    generated corpora (``materialize`` as in :func:`overlap_matrix`)."""
+    generated corpora (persist / truncate / unpersist as in
+    :func:`overlap_matrix`)."""
     from pyspark.sql import Window
 
     sgh = (
@@ -734,9 +699,8 @@ def overlap_kmv(
             F.conv(F.substring("g", 1, 15), 16, 10).cast("long").alias("h"),
         )
         .distinct()
+        .persist()
     )
-    if materialize:
-        sgh = sgh.persist()
     pref, n = bottomk_prefilter(sgh, "source", _OVK_K, _OVK_SAFETY)
     w = Window.partitionBy("source").orderBy("h")
     bk = (
@@ -813,9 +777,8 @@ def overlap_kmv(
             "est_containment"
         ),
     )
-    if materialize:
-        out = truncate(out)
-        sgh.unpersist()
+    out = truncate(out)
+    sgh.unpersist()
     return out
 
 

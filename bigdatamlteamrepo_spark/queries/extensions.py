@@ -17,11 +17,11 @@ Near-dup tier design (the 100 TB story):
   bands (complete for Hamming ≤ 3), oracle-checked via the same
   portable bit derivation.
 
-ANN: the single-sketch RP-LSH top-k is fully hash-checked (literal
-hyperplanes in both engines, cosine re-rank bit-exact); banded/
-multi-probe/IVF variants are rows-only with recall-vs-exact asserted
-in pytest on planted-cluster fixtures (IVF's quantizer is engine-side
-MLlib KMeans, so no SQL twin exists).
+ANN: the single-sketch and banded RP-LSH top-k faces are fully
+hash-checked (literal hyperplanes in both engines, cosine re-rank
+bit-exact).  The multi-probe and MLlib-KMeans IVF operators have no
+registered face; their recall-vs-exact bounds are asserted in pytest on
+planted-cluster fixtures.
 """
 
 from __future__ import annotations
@@ -37,7 +37,6 @@ from bigdatamlteamrepo_spark.operators.dedup import (
 )
 from bigdatamlteamrepo_spark.operators.similarity import (
     hyperplane_values,
-    ivf_topk,
     rp_band_candidate_pairs,
     rp_lsh_topk,
 )
@@ -599,94 +598,6 @@ def ann_rp_lsh_banded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MP_FLIP = 2
-
-
-def _ann_multiprobe_oracle() -> str:
-    """DuckDB twin of the multi-probe sketch: per-plane dots are the
-    same sequential folds, so |margin| ordering (tie-broken by plane)
-    and the XOR'd probe buckets match bit-for-bit.
-
-    Currently UNREFERENCED: the face was deregistered in r12 (registry
-    headroom; see the comment above ann_rp_lsh_multiprobe_topk).  Kept,
-    like sketches._KMV_BY_FLAG_ORACLE, so a future re-registration
-    round-trips without digging through git history."""
-    rows = []
-    for p in range(_ANN_PLANES):
-        vals = hyperplane_values(_LSH_DIM, p, _LSH_SEED)
-        lit = "[" + ", ".join(repr(v) for v in vals) + "]"
-        rows.append(f"({p}, {lit}::DOUBLE[])")
-    values = ",\n    ".join(rows)
-    cos = (
-        f"({dot_expr('q_emb', 'c_emb')} / "
-        f"({norm_expr('q_emb')} * {norm_expr('c_emb')}))"
-    )
-    return f"""
-WITH __planes(plane_id, p) AS (VALUES
-    {values}),
-__dots AS (
-  SELECT e.vec_id, pl.plane_id,
-         list_sum(list_transform(range(1, {_LSH_DIM} + 1),
-                i -> CAST(e.embedding[i] AS DOUBLE) * pl.p[i])) AS d
-  FROM embeddings e CROSS JOIN __planes pl
-),
-__sig AS (
-  SELECT vec_id,
-         CAST(SUM(CASE WHEN d >= 0 THEN 1 << plane_id ELSE 0 END) AS BIGINT)
-           AS bucket
-  FROM __dots GROUP BY vec_id
-),
-__flips AS (
-  SELECT vec_id, plane_id,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY abs(d), plane_id)
-           AS rk
-  FROM __dots
-),
-__probes AS (
-  SELECT vec_id, bucket AS probe FROM __sig WHERE vec_id < {_ANN_NQ}
-  UNION ALL
-  SELECT f.vec_id, xor(s.bucket, CAST(1 << f.plane_id AS BIGINT)) AS probe
-  FROM __flips f JOIN __sig s USING (vec_id)
-  WHERE f.rk <= {_MP_FLIP} AND f.vec_id < {_ANN_NQ}
-),
-__j AS (
-  SELECT p.vec_id AS query_id, c.vec_id AS neighbor_id,
-         eq.embedding AS q_emb, ec.embedding AS c_emb
-  FROM __probes p
-  JOIN __sig c ON c.bucket = p.probe
-  JOIN embeddings eq ON eq.vec_id = p.vec_id
-  JOIN embeddings ec ON ec.vec_id = c.vec_id
-  WHERE c.vec_id <> p.vec_id
-)
-SELECT query_id, neighbor_id, {cos} AS cosine_sim,
-       CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY {cos} DESC, neighbor_id) AS INT) AS rank
-FROM __j
-QUALIFY rank <= {_ANN_K}
-"""
-
-
-# Deregistered in r12 (registry headroom, NOTES_r17 candidates): of the
-# three RP-LSH variants the base + banded pair stays registered (banded
-# is the recall-improving one — 0.934 vs multiprobe's 0.478 best,
-# SWEEP.md); multiprobe keeps its operator pins
-# (tests/test_ann_dedup.py::test_rp_lsh_multiprobe_recall) and stays
-# callable.
-def ann_rp_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdatamlteamrepo_spark.operators.similarity import rp_lsh_multiprobe_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return rp_lsh_multiprobe_topk(
-        emb,
-        _queries_set(spark, sf_dir, _ANN_NQ),
-        k=_ANN_K,
-        dim=_LSH_DIM,
-        n_planes=_ANN_PLANES,
-        n_flip=_MP_FLIP,
-        exclude_self=True,
-    )
-
-
 _VOR_ANCHORS = 8
 _VOR_PROBE = 3
 
@@ -747,26 +658,6 @@ def ann_voronoi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_anchors=_VOR_ANCHORS,
         n_probe=_VOR_PROBE,
         exclude_self=True,
-    )
-
-
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MLlib-KMeans IVF top-k — DEREGISTERED from the query registry
-    (VERDICT_r8 #2): the fitted quantizer's cells are nondeterministic,
-    so its driver row could never be more than rows-only and sat
-    permanently non-green in the ledger.  The operator stays fully
-    covered: recall ≥ pinned thresholds in tests/test_ann_dedup.py, and
-    the deterministic-quantizer registry faces of the same family are
-    ``ann_voronoi_topk`` (oracle-green) and ``ann_ivfpq_topk``."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(
-        emb,
-        _queries_set(spark, sf_dir),
-        k=10,
-        n_cells=8,
-        n_probe=3,
-        exclude_self=True,
-        fit_sample_fraction=0.5,
     )
 
 

@@ -405,7 +405,7 @@ def doc_quality_model_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     the model's holdout AUC floor asserted) in tests/test_ml_quality.py.
     Having no oracle, it sorts after every oracle-paired query, so it
     never occupies a driver correctness-window slot (rows-only rows read
-    as non-green — the r03 ann_ivf_topk lesson)."""
+    as non-green — the lesson of the r03 MLlib-IVF face)."""
     from bigdatamlteamrepo_spark.ml.quality import (
         holdout_split,
         score_documents_expr,

@@ -51,9 +51,8 @@ MIX_ALPHA = 0.5
 #: packed sequence length (tokens per training sample window)
 SEQ_LEN = 2048
 #: output shard count for the deterministic deal (driver-SF default;
-#: see ``doc_shard_assignment_n64`` for the scale-realistic variant —
-#: window parallelism equals the shard count, so a production deal uses
-#: thousands of shards, not 8)
+#: window parallelism equals the shard count, so a production deal passes
+#: thousands of shards to ``shard_assignment``, not 8)
 N_SHARDS = 8
 #: doc_id-range bucket width for the skew-split pack: the cumsum window
 #: partitions by (source, bucket) so parallelism is ~corpus_size/BUCKET
@@ -354,9 +353,9 @@ def shard_assignment(
     The window's parallelism IS ``n_shards``: each shard is one sort
     task.  A production deal therefore sizes n_shards to the cluster
     (hundreds to thousands — shards are also the trainer's read unit),
-    never the driver-SF default of 8; ``doc_shard_assignment_n64`` is
-    the scale-realistic variant (pytest-pinned; deregistered from the
-    driver rotation in r12 as family-redundant)."""
+    never the driver-SF default of 8.  Only the parameter changes with
+    scale, not the plan; ``tests/test_shards_properties.py`` pins the
+    deal at 16 shards."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     d = docs.withColumn("h32", hash32(F.col("doc_id"))).withColumn(
         "shard", F.col("h32") % n_shards
@@ -371,16 +370,6 @@ def shard_assignment(
 def doc_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-SF default deal (N_SHARDS=8) — see :func:`shard_assignment`."""
     return shard_assignment(spark, sf_dir, N_SHARDS)
-
-
-# Deregistered in r12 (registry headroom, NOTES_r17 candidates): same
-# operator as doc_shard_assignment at a different shard count, so the
-# driver slot was redundant.  The 64-shard semantics keep their pytest
-# pins (tests/test_shards.py) and the function stays callable.
-def doc_shard_assignment_n64(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale-realistic deal: 64 shards ⇒ 64-way window parallelism at
-    driver SF (thousands in production; parameter, not plan, changes)."""
-    return shard_assignment(spark, sf_dir, 64)
 
 
 # --------------------------------------------------------------------------

@@ -202,71 +202,6 @@ def kmv_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Grouped KMV: per-group bottom-k distinct estimates.
-# --------------------------------------------------------------------------
-
-
-# Deregistered in r12 (registry headroom, NOTES_r17 candidates): of the
-# two sketch families answering the same distinct-orders-by-flag
-# question, hll_orders_by_flag keeps the driver slot (it also anchors
-# the partitioning-invariance representatives); the KMV operator keeps
-# its sketch-algebra pins (tests/test_sketches.py) and the function
-# stays callable.  The former oracle twin is kept (unused) so a future
-# re-registration round-trips without digging through git history.
-_KMV_BY_FLAG_ORACLE = f"""
-WITH hashes AS (
-  SELECT DISTINCT l_returnflag, {_H} AS h FROM lineitem
-),
-ranked AS (
-  SELECT l_returnflag, h,
-         ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY h) AS rn
-  FROM hashes
-),
-sk AS (
-  SELECT l_returnflag, MAX(h) AS kth_hash, COUNT(*) AS n_kept
-  FROM ranked WHERE rn <= {KMV_K} GROUP BY l_returnflag
-),
-exact AS (
-  SELECT l_returnflag, COUNT(DISTINCT l_orderkey) AS exact_distinct
-  FROM lineitem GROUP BY l_returnflag
-)
-SELECT sk.l_returnflag, sk.n_kept, sk.kth_hash,
-       {kmv_estimate_sql('sk.kth_hash', 'sk.n_kept')} AS kmv_estimate,
-       exact.exact_distinct
-FROM sk JOIN exact USING (l_returnflag)
-"""
-
-
-def kmv_orders_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-return-flag distinct l_orderkey via bottom-64 sketches — the
-    grouped form of kmv_distinct_parts.  The window bottom-k runs on the
-    already-distinct (flag, hash) pairs; per-group sketch state is 64
-    longs, the mergeable rollup unit a production per-dimension
-    cardinality report carries."""
-    li = load_table(spark, sf_dir, "lineitem")
-    hashes = li.select(
-        "l_returnflag", h60(F.col("l_orderkey")).alias("h")
-    ).distinct()
-    w = Window.partitionBy("l_returnflag").orderBy("h")
-    sk = (
-        hashes.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= KMV_K)
-        .groupBy("l_returnflag")
-        .agg(F.max("h").alias("kth_hash"), F.count(F.lit(1)).alias("n_kept"))
-    )
-    exact = li.groupBy("l_returnflag").agg(
-        F.countDistinct("l_orderkey").alias("exact_distinct")
-    )
-    return sk.join(exact, "l_returnflag").select(
-        "l_returnflag",
-        "n_kept",
-        "kth_hash",
-        kmv_estimate(F.col("kth_hash"), F.col("n_kept")).alias("kmv_estimate"),
-        "exact_distinct",
-    )
-
-
-# --------------------------------------------------------------------------
 # Count-min heavy hitters: top suppliers by line count.
 # --------------------------------------------------------------------------
 

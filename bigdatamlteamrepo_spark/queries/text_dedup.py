@@ -26,7 +26,6 @@ from bigdatamlteamrepo_spark.catalog import load_table
 from bigdatamlteamrepo_spark.functions.arrays import first_match_category, has_any_keyword
 from bigdatamlteamrepo_spark.functions.text import (
     has_ws_tokens,
-    minhash_value,
     shingles,
     tokenize,
     ws_tokens,
@@ -580,10 +579,10 @@ _N_HASHES = 4
 
 # 24 hashes / 6 bands of 4: same per-band s-curve exponent (r=4) as the
 # original 16/4 config but 1.5 bands' worth more OR-amplification —
-# chosen after minhash_values_fast made extra seeds nearly free
-# (arithmetic, not md5).  Measured: candidate set == exact >=0.5
-# shingle-Jaccard pair set at sf0.001, sf0.01 AND sf0.1 (the 16/4
-# config missed 2/256 at sf0.1 on the s-curve tail).
+# chosen once the universal-hash signature (uh_signature_frame) made
+# extra seeds nearly free (arithmetic, not md5).  Measured: candidate
+# set == exact >=0.5 shingle-Jaccard pair set at sf0.001, sf0.01 AND
+# sf0.1 (the 16/4 config missed 2/256 at sf0.1 on the s-curve tail).
 LSH_N_HASHES = 24
 LSH_N_BANDS = 6
 
@@ -601,34 +600,18 @@ def _minhash_sql(seed: int) -> str:
     )
 
 
-def _mh_over_sh_sql(seed: int) -> str:
-    """MinHash for one seed over a pre-built shingle list column ``sh``."""
-    return f"list_min(list_transform(sh, s -> md5('{seed}|' || s)))"
-
-
 #: bits kept per hash (b=2 → agreement baseline 1/4 for J=0)
 _BBIT_MOD = 4
 
-#: b-bit prefilter threshold (see :func:`bbit_prefilter` for why this
-#: stage is NOT in the registered verify chain): a pair passes if >=
-#: this many of its 24 two-bit minhash remnants agree.  A true pair at
-#: the verify threshold J = 0.5 has n_agree ~ 4 + Binom(20, 0.625)
-#: (>= 1 shared band guarantees 4 agreements; per-hash remnant
-#: agreement prob = J + (1-J)/4) -> P(n_agree < 10) ~ 7e-4.  Mirrored
-#: hash-for-hash in the __lsh_pairs_pre oracle CTE.
-BBIT_PRE_MIN = 10
-
-
-def _n_agree_sql(n_hashes: int = LSH_N_HASHES) -> str:
+def _n_agree_sql() -> str:
     """SQL for the 2-bit remnant agreement count between ``a``/``b``
-    rows of ``__sig`` (shared by the bbit estimator and the verify
-    prefilter)."""
+    rows of ``__sig`` (the oracle of :func:`bbit_minhash_jaccard_pairs`)."""
     return (
         "CAST(("
         + " + ".join(
             f"CASE WHEN a.mh_{i} % {_BBIT_MOD} = b.mh_{i} % {_BBIT_MOD}"
             f" THEN 1 ELSE 0 END"
-            for i in range(n_hashes)
+            for i in range(LSH_N_HASHES)
         )
         + ") AS BIGINT)"
     )
@@ -637,20 +620,14 @@ def _n_agree_sql(n_hashes: int = LSH_N_HASHES) -> str:
 def lsh_pairs_ctes(
     n_hashes: int = LSH_N_HASHES,
     n_bands: int = LSH_N_BANDS,
-    prefilter: bool = False,
 ) -> str:
     """Shared oracle CTE chain ending in ``__lsh_pairs(doc_a, doc_b)``.
 
     Mirrors the Spark plan of :func:`lsh_candidate_pairs` hash-for-hash
     (one md5 per shingle → word-derived universal-hash minhash
-    (functions/text.py:minhash_values_fast) → banded keys → equi-join)
-    so every LSH-derived query
-    stays oracle-checkable.  Callers embed it as ``WITH {ctes}, ...``.
-
-    ``prefilter=True`` appends ``__lsh_pairs_pre`` — the oracle twin of
-    :func:`bbit_prefilter` (NOT part of any registered chain; see the
-    measured negative result there) — for callers pairing the operator
-    with SQL."""
+    (:func:`uh_signature_frame`) → banded keys → equi-join) so every
+    LSH-derived query stays oracle-checkable.  Callers embed it as
+    ``WITH {ctes}, ...``."""
     from bigdatamlteamrepo_spark.functions.text import UH_MOD, uh_constants
 
     r = n_hashes // n_bands
@@ -665,19 +642,6 @@ def lsh_pairs_ctes(
         + " || ".join(f"CAST(mh_{b * r + j} AS VARCHAR)" for j in range(r))
         + ") AS band FROM __sig"
         for b in range(n_bands)
-    )
-    pre_cte = (
-        f""",
-__lsh_pairs_pre AS (
-  SELECT doc_a, doc_b FROM (
-    SELECT p.doc_a, p.doc_b, {_n_agree_sql(n_hashes)} AS n_agree
-    FROM __lsh_pairs p
-    JOIN __sig a ON a.doc_id = p.doc_a
-    JOIN __sig b ON b.doc_id = p.doc_b
-  ) WHERE n_agree >= {BBIT_PRE_MIN}
-)"""
-        if prefilter
-        else ""
     )
     return f"""__t0 AS (SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents),
 __sh AS (SELECT doc_id, {_SHINGLES_SQL} AS sh FROM __t0 WHERE len(toks) >= 3),
@@ -694,7 +658,7 @@ __bands AS (
 __lsh_pairs AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM __bands a JOIN __bands b ON a.band = b.band AND a.doc_id < b.doc_id
-){pre_cte}"""
+)"""
 
 
 def lsh_band_rows(
@@ -758,61 +722,9 @@ def uh_signature_frame(
     )
 
 
-def bbit_prefilter(
-    cand: DataFrame,
-    sig: DataFrame,
-    min_agree: int = BBIT_PRE_MIN,
-    n_hashes: int = LSH_N_HASHES,
-) -> DataFrame:
-    """Drop candidate pairs whose 2-bit minhash remnants agree on fewer
-    than ``min_agree`` of ``n_hashes`` positions — the b-bit compressed
-    prefilter (Li & König 2010).  Reads ONLY the (doc_id, n_hashes
-    longs) signature frame, never the shingle sets; integer threshold,
-    tie-free oracle twin (``__lsh_pairs_pre``).
-
-    **Deliberately NOT wired into the registered verify chain** — a
-    measured negative result (VERDICT_r6 #9, SCALING.md "b-bit verify
-    prefilter"): after SAME-hash 24/6 banding the prefilter is
-    structurally blind.  A band collision guarantees 4 remnant
-    agreements, and banding only admits pairs whose minhash agreement
-    is already high (selection bias: the bands ARE minhash agreement),
-    so the remnants re-read correlated evidence — junk candidates that
-    banding admits sit at J ≈ 0.3, where n_agree ~ 4 + Binom(20,
-    0.475) clears any threshold safe for true J = 0.5 pairs.  Measured
-    0-1%% candidate reduction (pairs unchanged) on the driver corpora,
-    CorpusGen 5k-80k, and a constructed mid-similarity corpus.  The
-    tier earns its keep only with an INDEPENDENT second hash family
-    sized for the mid-similarity gap (k >= 100 remnants, the
-    production b-bit sketch sizing) — at which point it belongs in the
-    persisted-index probe (neardup_incremental_lsh), not the one-shot
-    corpus chain."""
-    rem = sig.select(
-        "doc_id",
-        *[(F.col(f"m{i}") % _BBIT_MOD).alias(f"r{i}") for i in range(n_hashes)],
-    )
-    ra = rem.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"r{i}").alias(f"ra{i}") for i in range(n_hashes)],
-    )
-    rb = rem.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"r{i}").alias(f"rb{i}") for i in range(n_hashes)],
-    )
-    n_agree = sum(
-        (F.col(f"ra{i}") == F.col(f"rb{i}")).cast("int")
-        for i in range(n_hashes)
-    )
-    return (
-        cand.join(ra, "doc_a")
-        .join(rb, "doc_b")
-        .filter(n_agree >= F.lit(min_agree))
-        .select("doc_a", "doc_b")
-    )
-
-
 #: independent b-bit family: 128 hashes from a DIFFERENT PRNG seed than
-#: the 24-hash LSH banding family, 2-bit remnants packed into four
-#: 64-bit planes per doc (32 bytes) — the production sketch sizing
+#: the 24-hash LSH banding family, 2-bit remnants packed into eight
+#: 32-bit words per doc (32 bytes) — the production sketch sizing
 #: (Li & König 2010) under which the prefilter reads evidence the
 #: banding did NOT select on
 BBIT_IND_HASHES = 128
@@ -901,11 +813,12 @@ def bbit_independent_prefilter(
     This is the configuration under which the b-bit tier earns its
     keep (SCALING.md "b-bit verify prefilter"): the hashes are drawn
     from a family the banding never saw, so mid-similarity junk that
-    banding admitted by luck is re-judged on fresh evidence — unlike
-    the correlated 24-remnant variant (:func:`bbit_prefilter`), which
-    re-reads the selection evidence and was measured to remove ~0%.
-    Agreement is popcount arithmetic over the four packed planes; the
-    join moves 32 bytes/doc from the persisted sketch table."""
+    banding admitted by luck is re-judged on fresh evidence.  Remnants
+    of the banding's own 24 hashes would re-read the selection evidence
+    instead; that correlated variant was measured to remove ~0% and was
+    deleted (its history is in git).  Agreement is popcount arithmetic
+    over the packed planes; the join moves 32 bytes/doc from the
+    persisted sketch table."""
     return (
         bbit_independent_agreement(cand, sk)
         .filter(F.col("n_agree") >= F.lit(min_agree))
@@ -1097,10 +1010,10 @@ WHERE len(toks) >= 3
     bench=True,
 )
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # same md5-per-(seed,shingle) values as functions/text.minhash_values
-    # (the oracle's fixed point), computed as explode + grouped MIN with
-    # map-side partial aggregation instead of the per-row array fold —
-    # measured 2× at sf0.1, values bit-identical
+    # same md5-per-(seed,shingle) values as the oracle's _minhash_sql,
+    # computed as explode + grouped MIN with map-side partial
+    # aggregation instead of a per-row array fold — measured 2× at
+    # sf0.1, values bit-identical
     df = _with_tokens(spark, sf_dir).filter(F.size("toks") >= 3)
     ex = df.select("doc_id", F.explode(shingles(F.col("toks"), 3)).alias("s"))
     return ex.groupBy("doc_id").agg(
@@ -1264,7 +1177,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guarantees 4 agreements, so the prefilter re-reads correlated
     # evidence and cannot discriminate (measured 0-1% candidate
     # reduction at any safe threshold — see SCALING.md "b-bit verify
-    # prefilter" and :func:`bbit_prefilter`).
+    # prefilter").
     sets = truncate(_shingle_sets(spark, sf_dir), eager=False)
     cand = lsh_candidate_pairs(spark, sf_dir, sets=sets)
     return _pair_jaccard(cand, sets, _JACCARD_MIN, materialize=False)

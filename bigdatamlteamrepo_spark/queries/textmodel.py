@@ -1555,95 +1555,6 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# Skew-split LM scoring: hot/cold model partition for the Zipf head.
-# --------------------------------------------------------------------------
-
-#: hot-key split width: the top bigrams by count go down the broadcast
-#: path; everything else shuffles.  At 100 TB the head bigram ("of the"
-#: class) is billions of rows on ONE shuffle key — the canonical skew
-#: case AQE mitigates reactively; this plan removes it a priori.
-LM_HOT_K = 64
-
-
-# Deregistered in r12 (registry headroom, NOTES_r17 candidates): the
-# salting variant of doc_lm_perplexity — same oracle, same results by
-# construction; the hot/cold-split behavior is pinned in
-# tests/test_textmodel.py (equality with the single-join plan) and the
-# function stays callable.
-def doc_lm_perplexity_hotsplit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``doc_lm_perplexity`` with the model join split by key heat:
-    the LM_HOT_K most frequent bigrams — known for free from the LM
-    count itself — are broadcast and map-joined (no shuffle for the
-    Zipf head), the cold tail goes through the ordinary equi-join.
-    Documents route per-bigram via broadcast semi/anti joins, scored
-    rows re-unite before the per-doc integer sum, so results are
-    byte-identical to the single-join plan (same oracle; equality also
-    asserted in test_textmodel).
-
-    This is the complementary pattern to ``operators/skew.py``'s
-    salting: salting spreads ONE hot key across reducers, the hot/cold
-    split removes hot keys from the shuffle entirely — the right tool
-    when the hot set is small, known, and carries a payload (the model
-    row) cheap enough to broadcast."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = docs.select("doc_id", "lang", tokenize("text").alias("toks"))
-    bg = t.filter(F.size("toks") >= 2).select(
-        "doc_id", "lang", F.explode(shingles(F.col("toks"), 2)).alias("bigram")
-    )
-    lm = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("c_xy"))
-    uni = (
-        lm.withColumn("x", F.split("bigram", " ")[0])
-        .groupBy("x")
-        .agg(F.sum("c_xy").cast("bigint").alias("c_x"))
-    )
-    vsz = t.select(F.explode("toks").alias("tok")).agg(
-        F.countDistinct("tok").alias("vsz")
-    )
-    lmx = truncate(  # reused by hot select, semi, anti, cold
-        lm.withColumn("x", F.split("bigram", " ")[0])
-        .join(uni, "x")
-        .select("bigram", "c_xy", "c_x")
-    )
-    hot = truncate(
-        lmx.orderBy(F.col("c_xy").desc(), "bigram").limit(LM_HOT_K)
-    )
-    bg_hot = bg.join(F.broadcast(hot.select("bigram")), "bigram", "left_semi")
-    bg_cold = bg.join(F.broadcast(hot.select("bigram")), "bigram", "left_anti")
-    cold = lmx.join(F.broadcast(hot.select("bigram")), "bigram", "left_anti")
-    scored = bg_hot.join(F.broadcast(hot), "bigram").unionByName(
-        bg_cold.join(cold, "bigram")
-    )
-    lp = F.log(
-        (F.col("c_xy") + F.lit(LM_K))
-        / (F.col("c_x") + F.lit(LM_K) * F.col("vsz"))
-    )
-    agg = (
-        scored.crossJoin(F.broadcast(vsz))
-        .select(
-            "doc_id", "lang", F.round(lp * MICRO).cast("bigint").alias("lp_micro")
-        )
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.sum("lp_micro").cast("bigint").alias("lp_sum_micro"),
-        )
-    )
-    mean_lp = F.col("lp_sum_micro").cast("double") / MICRO / F.col("n_bigrams")
-    w = Window.partitionBy("lang").orderBy(
-        (F.col("lp_sum_micro").cast("double") / F.col("n_bigrams")).desc(),
-        "doc_id",
-    )
-    return agg.select(
-        "doc_id",
-        "lang",
-        "n_bigrams",
-        "lp_sum_micro",
-        F.round(F.exp(-mean_lp), 6).alias("perplexity"),
-        F.ntile(3).over(w).cast("bigint").alias("ppl_tercile"),
-    )
-
-
 def bpe_encode_words(words: DataFrame, merges: list[str]) -> DataFrame:
     """Apply learned merges (rank order) to the distinct-word table:
     standard BPE encoding as a chain of sequential array folds — one

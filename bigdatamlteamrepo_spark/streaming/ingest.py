@@ -179,7 +179,7 @@ _LEASE_TTL_SEC = 900
 
 def _acquire_compaction_lease(
     spark: SparkSession, root: str, ttl_sec: int = _LEASE_TTL_SEC
-) -> str:
+) -> tuple[str, str]:
     """Take the single-compactor lease on ``root`` (VERDICT_r7 #6).
 
     Compaction's crash-safety story (manifest + rename-swap + heal)
@@ -252,26 +252,23 @@ def _acquire_compaction_lease(
     return lease, token
 
 
-def _release_compaction_lease(spark: SparkSession, lease) -> None:
+def _release_compaction_lease(
+    spark: SparkSession, lease: tuple[str, str]
+) -> None:
     """Release an acquired lease — ``lease`` is the ``(path, token)``
-    pair from :func:`_acquire_compaction_lease` (a bare path string is
-    accepted for legacy callers and released unconditionally).  With a
-    token, the file is read-and-compared first: a mismatch means a
-    contender stole the lease past its TTL and the fresh lease is
-    THEIRS — deleting it would re-open the double-compactor window
-    (ADVICE_r8 #1), so release becomes a no-op."""
-    if isinstance(lease, str):
-        path, token = lease, None
-    else:
-        path, token = lease
+    pair from :func:`_acquire_compaction_lease`.  The file is
+    read-and-compared first: a mismatch means a contender stole the
+    lease past its TTL and the fresh lease is THEIRS — deleting it
+    would re-open the double-compactor window (ADVICE_r8 #1), so
+    release becomes a no-op."""
+    path, token = lease
+    try:
+        current = _read_text(spark, path)
+    except Exception:
+        return  # lease already gone (stolen + released): nothing to do
+    if current != token:
+        return  # stolen by a contender — the fresh lease is theirs
     fs, p, _ = _fs_path(spark, path)
-    if token is not None:
-        try:
-            current = _read_text(spark, path)
-        except Exception:
-            return  # lease already gone (stolen + released): nothing to do
-        if current != token:
-            return  # stolen by a contender — the fresh lease is theirs
     fs.delete(p, False)
 
 

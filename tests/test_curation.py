@@ -437,38 +437,29 @@ def test_diversity_sample_buckets_reconstruct(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-def test_curation_plans_no_cartesian(spark, sf_dir):
+def test_curation_plans_no_cartesian(spark, sf_dir, monkeypatch):
     """Registered passage_neardup_pairs / source_overlap_matrix return
-    a materialized (checkpointed) frame whose plan is just a scan, so
-    the gate inspects their LAZY cores (materialize=False) — the full
-    join tree, including the auto-cap constant-key broadcast join,
-    which must plan as a hash join, never a nested loop."""
+    a checkpointed frame whose plan is just a scan, so the gate swaps
+    the lineage cut for identity and inspects the production join tree
+    underneath: no cartesian product, no nested-loop join (the auto
+    cap is a collected literal, so no scalar broadcast either)."""
+    from bigdatamlteamrepo_spark.queries import curation
+
+    monkeypatch.setattr(curation, "truncate", lambda df, eager=True: df)
     docs = _docs_frame(
         spark,
         [(i, " ".join(_words(90 + i, 2 * _PW)), "en", f"s{i % 2}", 0) for i in range(4)],
     )
-    lazy = {
-        # allowed=2: the auto-cap 1-ROW scalar broadcast over the width
-        # table (the engine-wide pattern, e.g. doc_lm_perplexity's vsz)
-        # appears once under each side of the band self-join
-        "passage_neardup_pairs(lazy)": (
-            passage_neardup_doc_pairs(docs, materialize=False),
-            2,
-        ),
-        "source_overlap_matrix(lazy)": (
-            overlap_matrix(docs, materialize=False),
-            0,
-        ),
-        "doc_ngram_novelty": (QUERIES["doc_ngram_novelty"](spark, sf_dir), 0),
-        "diversity_sample_lsh": (
-            QUERIES["diversity_sample_lsh"](spark, sf_dir),
-            0,
-        ),
+    plans = {
+        "passage_neardup_pairs": passage_neardup_doc_pairs(docs),
+        "source_overlap_matrix": overlap_matrix(docs),
+        "doc_ngram_novelty": QUERIES["doc_ngram_novelty"](spark, sf_dir),
+        "diversity_sample_lsh": QUERIES["diversity_sample_lsh"](spark, sf_dir),
     }
-    for name, (df, allowed) in lazy.items():
+    for name, df in plans.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, name
-        assert plan.count("BroadcastNestedLoopJoin") <= allowed, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
 
 
 def test_diversity_sample_is_single_shuffle(spark, sf_dir):

@@ -298,119 +298,6 @@ def test_bbit_minhash_estimator_bounds(spark, sf_dir):
     assert all(est[p] >= 0.2 for p in exact), min(est[p] for p in exact)
 
 
-def test_bbit_prefilter_drops_low_agreement_only(spark):
-    """Operator contract: pairs below the remnant-agreement threshold
-    are dropped, pairs at/above it survive — driven with a synthetic
-    signature table so the threshold semantics are pinned exactly."""
-    from pyspark.sql import functions as F
-
-    from bigdatamlteamrepo_spark.queries.text_dedup import (
-        BBIT_PRE_MIN,
-        LSH_N_HASHES,
-        bbit_prefilter,
-    )
-
-    # doc 0: baseline; doc 1 agrees on exactly BBIT_PRE_MIN remnants;
-    # doc 2 agrees on BBIT_PRE_MIN - 1 (the % 4 remnant of m_i differs
-    # unless values are equal)
-    def sig_row(doc_id, n_same):
-        return tuple(
-            [doc_id]
-            + [4 * i if i < n_same else 4 * i + 1 + doc_id for i in range(LSH_N_HASHES)]
-        )
-
-    cols = "doc_id long, " + ", ".join(
-        f"m{i} long" for i in range(LSH_N_HASHES)
-    )
-    sig = spark.createDataFrame(
-        [
-            sig_row(0, LSH_N_HASHES),
-            sig_row(1, BBIT_PRE_MIN),
-            sig_row(2, BBIT_PRE_MIN - 1),
-        ],
-        cols,
-    )
-    cand = spark.createDataFrame(
-        [(0, 1), (0, 2)], "doc_a long, doc_b long"
-    )
-    kept = {
-        (r.doc_a, r.doc_b) for r in bbit_prefilter(cand, sig).collect()
-    }
-    assert kept == {(0, 1)}
-
-
-def test_bbit_prefilter_lossless_on_driver_corpus(spark, sf_dir):
-    """The measured no-loss property behind the SCALING.md negative
-    result: on the driver corpus the prefilter drops no candidate that
-    the exact verify would keep (and, because same-hash banding admits
-    only high-agreement pairs, barely any it would reject)."""
-    from pyspark.sql import functions as F
-
-    from bigdatamlteamrepo_spark.queries.text_dedup import (
-        _JACCARD_MIN,
-        _pair_jaccard,
-        _shingle_sets,
-        bbit_prefilter,
-        lsh_candidate_pairs,
-        uh_signature_frame,
-    )
-
-    sets = _shingle_sets(spark, sf_dir).localCheckpoint(eager=True)
-    sig = uh_signature_frame(sets, F.col("s")).localCheckpoint(eager=True)
-    cand = lsh_candidate_pairs(spark, sf_dir, sets=sets).localCheckpoint(
-        eager=True
-    )
-    pre = bbit_prefilter(cand, sig)
-    old = {
-        (r.doc_a, r.doc_b)
-        for r in _pair_jaccard(cand, sets, _JACCARD_MIN)
-        .select("doc_a", "doc_b")
-        .collect()
-    }
-    new = {
-        (r.doc_a, r.doc_b)
-        for r in _pair_jaccard(pre, sets, _JACCARD_MIN)
-        .select("doc_a", "doc_b")
-        .collect()
-    }
-    assert new == old
-
-
-def test_bbit_prefilter_matches_oracle_twin(spark, sf_dir):
-    """The un-wired operator's SQL twin stays honest: engine
-    bbit_prefilter over the LSH candidates == DuckDB __lsh_pairs_pre
-    (lsh_pairs_ctes(prefilter=True)) on the driver corpus."""
-    import duckdb
-    from pyspark.sql import functions as F
-
-    from bigdatamlteamrepo_spark.queries.text_dedup import (
-        _shingle_sets,
-        bbit_prefilter,
-        lsh_candidate_pairs,
-        lsh_pairs_ctes,
-        uh_signature_frame,
-    )
-
-    sets = _shingle_sets(spark, sf_dir).localCheckpoint(eager=True)
-    sig = uh_signature_frame(sets, F.col("s"))
-    cand = lsh_candidate_pairs(spark, sf_dir, sets=sets)
-    got = {
-        (r.doc_a, r.doc_b) for r in bbit_prefilter(cand, sig).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
-    want = {
-        tuple(r)
-        for r in con.execute(
-            f"WITH {lsh_pairs_ctes(prefilter=True)} "
-            "SELECT doc_a, doc_b FROM __lsh_pairs_pre"
-        ).fetchall()
-    }
-    assert got == want
-
-
 def test_bbit_independent_prefilter_operating_characteristic(spark):
     """The independent 128-hash 2-bit prefilter (VERDICT_r7 #8,
     SCALING.md r08 follow-up) must annihilate low-J junk while keeping

@@ -341,24 +341,6 @@ def test_batched_bpe_with_batch_1_equals_sequential(spark, sf_dir):
     assert one == seq
 
 
-def test_lm_hotsplit_identical_and_broadcasts_head(spark, sf_dir):
-    """The hot/cold-split plan must be row-identical to the single-join
-    LM scorer, and its hot path must be broadcast joins (the Zipf head
-    never shuffles)."""
-    from bigdatamlteamrepo_spark.queries.textmodel import (
-        doc_lm_perplexity_hotsplit,
-    )
-
-    base = sorted(map(tuple, doc_lm_perplexity(spark, sf_dir).collect()), key=repr)
-    split = doc_lm_perplexity_hotsplit(spark, sf_dir)
-    got = sorted(map(tuple, split.collect()), key=repr)
-    assert got == base
-    plan = split._jdf.queryExecution().executedPlan().toString()
-    # hot-model join + semi + anti routing all broadcast
-    assert plan.count("BroadcastHashJoin") >= 3
-    assert "CartesianProduct" not in plan
-
-
 def test_bpe_encode_matches_independent_python(spark, sf_dir):
     """Applying the learned merges must reproduce the independent
     Python encoder's symbol sequences word-for-word."""

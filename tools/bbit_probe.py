@@ -6,12 +6,12 @@ SCALING.md "b-bit verify prefilter" recorded the r07 negative result
 bias) and the condition under which the tier earns its keep: an
 independent >= 100-remnant family probing a persisted sketch.  This
 probe builds exactly that (text_dedup.bbit_sketch_frame, 128 hashes
-from an unrelated PRNG seed, 2-bit remnants packed into 4 longs) and
-measures:
+from an unrelated PRNG seed, 2-bit remnants packed into eight 32-bit
+words) and measures:
 
 1. the operating characteristic on a CONSTRUCTED corpus with known
-   pairwise shingle-Jaccard (keep-fraction per J bucket for both the
-   independent 128-hash and the correlated 24-hash variants), and
+   pairwise shingle-Jaccard (keep-fraction per J bucket of the
+   independent 128-hash prefilter), and
 2. end-to-end behavior on the driver corpus through real banding:
    true-pair loss (must be 0 at the default threshold on this corpus),
    candidate reduction, and the wall-time split
@@ -35,11 +35,9 @@ from bigdatamlteamrepo_spark.queries.text_dedup import (
     _pair_jaccard,
     _shingle_sets,
     bbit_independent_prefilter,
-    bbit_prefilter,
     bbit_sketch_frame,
     doc_shingle_sets,
     lsh_candidate_pairs,
-    uh_signature_frame,
 )
 
 #: tokens per constructed doc; pairs share a K-token prefix so the
@@ -80,16 +78,11 @@ def main() -> None:
     sets = doc_shingle_sets(docs).persist()
     sets.count()
     sk = bbit_sketch_frame(sets, "s").persist()
-    sig = uh_signature_frame(sets, "s").persist()
     kept_ind = {
         (r.doc_a, r.doc_b)
         for r in bbit_independent_prefilter(
             cand.select("doc_a", "doc_b"), sk
         ).collect()
-    }
-    kept_corr = {
-        (r.doc_a, r.doc_b)
-        for r in bbit_prefilter(cand.select("doc_a", "doc_b"), sig).collect()
     }
     jac = {
         (r.doc_a, r.doc_b): r.jaccard
@@ -98,7 +91,7 @@ def main() -> None:
         ).collect()
     }
     print("\n== operating characteristic (constructed corpus) ==")
-    print(f"{'K':>3} {'J':>6} {'n':>5} {'keep_ind128':>11} {'keep_corr24':>11}")
+    print(f"{'K':>3} {'J':>6} {'n':>5} {'keep_ind128':>11}")
     for ki, k in enumerate(_KS):
         ps = [
             (r.doc_a, r.doc_b)
@@ -106,8 +99,7 @@ def main() -> None:
         ]
         j = sum(jac[p] for p in ps) / len(ps)
         ki_frac = sum(p in kept_ind for p in ps) / len(ps)
-        kc_frac = sum(p in kept_corr for p in ps) / len(ps)
-        print(f"{k:>3} {j:>6.3f} {len(ps):>5} {ki_frac:>11.3f} {kc_frac:>11.3f}")
+        print(f"{k:>3} {j:>6.3f} {len(ps):>5} {ki_frac:>11.3f}")
 
     # ---- part 2: driver corpus through real banding -----------------
     print(f"\n== driver corpus ({sf_dir}) ==")

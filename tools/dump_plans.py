@@ -58,9 +58,6 @@ def main() -> None:
         "doc_pii_scan",
         "doc_mixture_sample",
         "doc_shard_assignment",
-        # scale-N deal: window parallelism == shard count (64 here; the
-        # 8-shard default above is the driver-SF fixed point)
-        "doc_shard_assignment_n64",
         # skew-split pack: the data-scale cumsum window must show
         # partitionBy (source, bucket), with only the tiny bucket-totals
         # window keyed by source alone
@@ -94,9 +91,7 @@ def main() -> None:
         "events_retention_cohorts",
         "events_value_hist_quantiles",
     ]
-    #: round-6 additions: curation/sketch/capstone tier — auto-capped
-    #: passage near-dup (band equi-join + 1-row cap broadcast), KMV/theta
-    #: containment (cutoff-prefiltered bottom-k windows), ANN semdedup
+    #: round-6 additions: curation/sketch/capstone tier — ANN semdedup
     #: (anchor cross-join collapsed by max_by hash-agg), quantile sketch
     #: (O(k)-row windows), b-bit estimator (signature equi-joins), and
     #: the end-to-end corpus-build accounting (presence-flag left joins)
@@ -106,16 +101,17 @@ def main() -> None:
         "session_burst_overlap",
     ]
     R6_SET = [
-        "passage_neardup_pairs",
-        "source_overlap_kmv",
         "embedding_semdedup_ann_summary",
         "events_value_quantile_sketch",
         "bbit_minhash_jaccard_pairs",
         # corpus_build_summary omitted: its registered form returns the
         # materialized per-source report (scan-only plan); each stage's
-        # plan is reviewable via its component query above
+        # plan is reviewable via its component query above.
+        # passage_neardup_pairs / source_overlap_matrix / source_overlap_kmv
+        # are omitted for the same reason: they return checkpointed
+        # frames; tests/test_curation.py::test_curation_plans_no_cartesian
+        # gates the join trees under the checkpoints
         "doc_ngram_novelty",
-        "source_overlap_matrix",
         "diversity_sample_lsh",
     ]
     #: round-4 additions: passage dedup (hash-keyed df join-back),
@@ -130,36 +126,8 @@ def main() -> None:
         "events_value_mad_outliers",
         "customer_rfm_segments",
     ]
-    # queries whose REGISTERED form returns a materialized (checkpointed)
-    # frame — dump the lazy core instead so the plan tree is reviewable
-    def _lazy(name):
-        from bigdatamlteamrepo_spark.catalog import load_table
-        from bigdatamlteamrepo_spark.queries.curation import (
-            overlap_kmv,
-            overlap_matrix,
-            passage_neardup_doc_pairs,
-        )
-
-        docs = load_table(spark, SF_DIR, "documents")
-        return {
-            "passage_neardup_pairs": lambda: passage_neardup_doc_pairs(
-                docs, materialize=False
-            ),
-            "source_overlap_matrix": lambda: overlap_matrix(
-                docs, materialize=False
-            ),
-            "source_overlap_kmv": lambda: overlap_kmv(docs, materialize=False),
-        }[name]()
-
-    LAZY = {"passage_neardup_pairs", "source_overlap_matrix", "source_overlap_kmv"}
-    # r12-deregistered faces stay plan-reviewable: callable but no
-    # longer in the registry
-    from bigdatamlteamrepo_spark.queries.shards import doc_shard_assignment_n64
-
-    DEREG = {"doc_shard_assignment_n64": doc_shard_assignment_n64}
     for name in BENCH_SET + NEARDUP_SET + PIPELINE_SET + SKETCH_SET + R5_SET + R4_SET + R6_SET + R12_SET:
-        fn = DEREG.get(name) or QUERIES.get(name)
-        df = _lazy(name) if name in LAZY else fn(spark, SF_DIR)
+        df = QUERIES[name](spark, SF_DIR)
         df.collect()  # finalize AQE
         plan = formatted_plan(df)
         # keep the tree + scan details; drop the verbose per-node I/O lists
