@@ -135,16 +135,6 @@ TABLE_SCHEMAS["embeddings"] = T.StructType(
 _TS_UNIT_CACHE: dict[str, str] = {}
 
 
-def clear_ts_unit_cache(path: str | None = None) -> None:
-    """Invalidate the footer-sniff cache — required after rewriting a
-    path in-process with the other timestamp unit (bench.py's layout
-    rewrite does exactly that)."""
-    if path is None:
-        _TS_UNIT_CACHE.clear()
-    else:
-        _TS_UNIT_CACHE.pop(path, None)
-
-
 def _first_parquet_footer(path: str):
     """ParquetFile for ``path`` or its first parquet child, resolving the
     filesystem from the URI (pyarrow.fs): works for local paths and for
@@ -172,8 +162,7 @@ def _first_parquet_footer(path: str):
 
 def events_ts_unit(path: str) -> str:
     """Timestamp unit ('ns' or 'us') of an events parquet file/directory,
-    read from the parquet footer (cached; invalidate with
-    :func:`clear_ts_unit_cache` after an in-process rewrite).  Footer
+    read from the parquet footer (cached per path).  Footer
     metadata is the source of truth — at 100 TB you cannot afford a data
     scan to discover the encoding, and the driver has shipped both
     encodings across rounds."""

@@ -77,17 +77,13 @@ def quality_terms(docs: DataFrame) -> DataFrame:
 
 def gopher_pass_labels(docs: DataFrame) -> DataFrame:
     """(doc_id, label) pseudo-labels: 1 = passes every Gopher rule."""
-    from bigdatamlteamrepo_spark.queries.pipeline import gopher_rule_flags
+    from bigdatamlteamrepo_spark.queries.pipeline import (
+        gopher_pass,
+        gopher_rule_flags,
+    )
 
     r = gopher_rule_flags(docs, "doc_id")
-    fails = (
-        F.col("f_words")
-        + F.col("f_mwl")
-        + F.col("f_alpha")
-        + F.col("f_stop")
-        + F.col("f_longword")
-    )
-    return r.select("doc_id", (fails == 0).cast("double").alias("label"))
+    return r.select("doc_id", gopher_pass().cast("double").alias("label"))
 
 
 @dataclass

@@ -28,6 +28,12 @@ the CCNet caveat).  Every decision frame is per-document and
 key-collapsed; no stage widens the data beyond the token explodes its
 operator already documents.
 
+The always-on decision chain (Gopher → exact → near-dup, then LM
+selection) is :func:`corpus_dedup_stages` plus :func:`lm_select`; the
+registered accounting faces (queries/textmodel.corpus_build_summary,
+corpus_survivor_ids) call the same two functions, so they count
+exactly what the product ships.
+
 At 100 TB each arrow is the same plan the registered query proves at
 driver SFs; the only additions here are left-semi joins gluing stage
 survivors together (hash joins on doc_id) and one final
@@ -41,6 +47,82 @@ from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.catalog import load_table
 from bigdatamlteamrepo_spark.operators import checkpoint
+
+
+def corpus_dedup_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Stages 1–3 of the decision chain, exactly as the product runs
+    them: ``{"docs": input, "s1": Gopher survivors, "s2": exact-dedup
+    keepers, "s3": near-dup keepers, "labels": (node, component)
+    near-dup clusters}``.  s1–s3 are document frames (every input
+    column); s2 and s3 are lineage cuts.  The build and the registered
+    accounting faces (queries/textmodel.corpus_build_summary,
+    corpus_survivor_ids) all run this one chain."""
+    from bigdatamlteamrepo_spark.operators.graph import connected_components
+    from bigdatamlteamrepo_spark.queries.pipeline import (
+        gopher_pass,
+        gopher_rule_flags,
+    )
+    from bigdatamlteamrepo_spark.queries.text_dedup import ngram_jaccard_pairs
+
+    docs = load_table(spark, sf_dir, "documents")
+
+    # ---- stage 1: Gopher quality gate (row-local flags, one scan)
+    flags = gopher_rule_flags(docs, "doc_id")
+    gopher_ids = flags.filter(gopher_pass() == 1).select("doc_id")
+    s1 = docs.join(gopher_ids, "doc_id", "left_semi")
+
+    # ---- stage 2: exact dedup — keep the min doc_id per (lang, md5)
+    exact_keep = (
+        s1.groupBy("lang", F.md5("text").alias("__h"))
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+    )
+    s2 = checkpoint.truncate(s1.join(exact_keep, "doc_id", "left_semi"))
+
+    # ---- stage 3: near-dup dedup — keep each cluster's min id.
+    # Pairs come from the registered LSH→verify plan over the full
+    # corpus (dedup decisions are corpus-level facts); survivors of
+    # earlier stages are then filtered by the keep rule.
+    pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    labels = connected_components(pairs, src="doc_a", dst="doc_b")
+    clustered = labels.select(F.col("node").alias("doc_id"))
+    # The representative must be chosen AMONG STAGE-2 SURVIVORS: the
+    # corpus-global component min may already have been removed by the
+    # Gopher gate or exact dedup, and keeping only that ghost would
+    # silently drop every surviving copy of the cluster's content.
+    # Restrict labels to s2, then keep min(doc_id) per component — each
+    # cluster with any surviving member ships exactly one.
+    reps = (
+        labels.join(
+            s2.select(F.col("doc_id").alias("node")), "node", "left_semi"
+        )
+        .groupBy("component")
+        .agg(F.min("node").alias("doc_id"))
+        .select("doc_id")
+    )
+    # survive iff not in any near-dup cluster, or the cluster's
+    # surviving representative
+    s3 = checkpoint.truncate(
+        s2.join(clustered, "doc_id", "left_anti").unionByName(
+            s2.join(reps, "doc_id", "left_semi")
+        )
+    )
+    return {"docs": docs, "s1": s1, "s2": s2, "s3": s3, "labels": labels}
+
+
+def lm_select(frame: DataFrame, lm: DataFrame | None = None) -> DataFrame:
+    """Stage 4 of the decision chain: keep ``frame``'s documents whose
+    bigram-LM perplexity tercile is ≤ 2 (CCNet head/middle), as a
+    lineage cut.  The LM trains on ``frame`` itself — the SAME plan as
+    the registered queries/textmodel.doc_lm_perplexity, scoring the
+    survivor frame directly — unless a precomputed (doc_id,
+    ppl_tercile) frame is passed as ``lm``."""
+    from bigdatamlteamrepo_spark.queries.textmodel import lm_perplexity_frame
+
+    if lm is None:
+        lm = lm_perplexity_frame(frame.select("doc_id", "lang", "text"))
+    keep_lm = lm.filter(F.col("ppl_tercile") <= 2).select("doc_id")
+    return checkpoint.truncate(frame.join(keep_lm, "doc_id", "left_semi"))
 
 
 def build_training_corpus(
@@ -104,63 +186,11 @@ def build_training_corpus(
     representative, so no verified near-dup pair straddles the eval
     boundary (the leakage_safe_split_summary guarantee, materialized).
     """
-    from bigdatamlteamrepo_spark.operators.graph import connected_components
-    from bigdatamlteamrepo_spark.queries.pipeline import gopher_rule_flags
-    from bigdatamlteamrepo_spark.queries.text_dedup import ngram_jaccard_pairs
-    from bigdatamlteamrepo_spark.queries.textmodel import lm_perplexity_frame
     from bigdatamlteamrepo_spark.sources.shard_writer import write_training_shards
 
-    docs = load_table(spark, sf_dir, "documents")
-
-    # ---- stage 1: Gopher quality gate (row-local flags, one scan)
-    flags = gopher_rule_flags(docs, "doc_id")
-    gopher_pass = flags.filter(
-        (
-            F.col("f_words")
-            + F.col("f_mwl")
-            + F.col("f_alpha")
-            + F.col("f_stop")
-            + F.col("f_longword")
-        )
-        == 0
-    ).select("doc_id")
-    s1 = docs.join(gopher_pass, "doc_id", "left_semi")
-
-    # ---- stage 2: exact dedup — keep the min doc_id per (lang, md5)
-    exact_keep = (
-        s1.groupBy("lang", F.md5("text").alias("__h"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    s2 = checkpoint.truncate(s1.join(exact_keep, "doc_id", "left_semi"))
-
-    # ---- stage 3: near-dup dedup — keep each cluster's min id.
-    # Pairs come from the registered LSH→verify plan over the full
-    # corpus (dedup decisions are corpus-level facts); survivors of
-    # earlier stages are then filtered by the keep rule.
-    pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components(pairs, src="doc_a", dst="doc_b")
-    clustered = labels.select(F.col("node").alias("doc_id"))
-    # The representative must be chosen AMONG STAGE-2 SURVIVORS: the
-    # corpus-global component min may already have been removed by the
-    # Gopher gate or exact dedup, and keeping only that ghost would
-    # silently drop every surviving copy of the cluster's content.
-    # Restrict labels to s2, then keep min(doc_id) per component — each
-    # cluster with any surviving member ships exactly one.
-    reps = (
-        labels.join(
-            s2.select(F.col("doc_id").alias("node")), "node", "left_semi"
-        )
-        .groupBy("component")
-        .agg(F.min("node").alias("doc_id"))
-        .select("doc_id")
-    )
-    # survive iff not in any near-dup cluster, or the cluster's
-    # surviving representative
-    s3 = checkpoint.truncate(
-        s2.join(clustered, "doc_id", "left_anti").unionByName(
-            s2.join(reps, "doc_id", "left_semi")
-        )
+    stages = corpus_dedup_stages(spark, sf_dir)
+    docs, s1, s2, s3, labels = (
+        stages[k] for k in ("docs", "s1", "s2", "s3", "labels")
     )
 
     # ---- stage 3.25 (optional): exact-substring span cutting — the
@@ -255,15 +285,9 @@ def build_training_corpus(
     else:
         s375 = s35
 
-    # ---- stage 4: LM perplexity selection (head/middle terciles).
-    # Train on the deduped survivors by default: build the LM frame
-    # from s35's text unless a precomputed one is passed in.
-    if lm is None:
-        # the SAME registered plan (queries/textmodel.doc_lm_perplexity)
-        # scores the survivor frame directly — no temp-table round-trip
-        lm = lm_perplexity_frame(s375.select("doc_id", "lang", "text"))
-    keep_lm = lm.filter(F.col("ppl_tercile") <= 2).select("doc_id")
-    selected = checkpoint.truncate(s375.join(keep_lm, "doc_id", "left_semi"))
+    # ---- stage 4: LM perplexity selection (head/middle terciles),
+    # trained on the survivors of every earlier stage by default
+    selected = lm_select(s375, lm)
 
     # ---- stage 4.5 (optional): leakage-safe split labels — every
     # shipped doc carries train/val/test hashed on its near-dup-cluster

@@ -1085,7 +1085,10 @@ def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-quantized values (functions/numeric.dsum), so the card is
     reduction-order-free.  Plan: one scan, one per-source agg, one
     stack() projection — no joins between heavyweight tiers."""
-    from bigdatamlteamrepo_spark.queries.pipeline import gopher_flag_exprs
+    from bigdatamlteamrepo_spark.queries.pipeline import (
+        gopher_flag_exprs,
+        gopher_pass,
+    )
     from bigdatamlteamrepo_spark.queries.text_dedup import _with_tokens
 
     docs = _with_tokens(spark, sf_dir)
@@ -1095,17 +1098,6 @@ def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle join and evaluated tokenize + the flag arithmetic on a
     # SECOND corpus pass; the size>0 filter replaces the join's
     # implicit drop of token-less docs, guide §2.4)
-    fx = gopher_flag_exprs()
-    pass_g = (
-        (
-            fx["f_words"]
-            + fx["f_mwl"]
-            + fx["f_alpha"]
-            + fx["f_stop"]
-            + fx["f_longword"]
-        )
-        == 0
-    ).cast("int")
     toks = F.col("toks")
     t = docs.filter(F.size(toks) > 0).select(
         "doc_id",
@@ -1117,7 +1109,7 @@ def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.array_distinct(toks)).cast("double")
             / F.greatest(F.size(toks), F.lit(1)).cast("double")
         ).alias("ttr"),
-        pass_g.alias("pass_gopher"),
+        gopher_pass(gopher_flag_exprs()).alias("pass_gopher"),
     )
     a = t.groupBy("source").agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),

@@ -1098,10 +1098,11 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Curate → search composition: similarity search restricted to the
 # documents the END-TO-END corpus build actually ships.  The synthetic
 # corpus links embeddings to documents 1:1 by id (vec_id = doc_id), so
-# the survivor set from queries/textmodel.corpus_stage_frames projects
-# directly onto the embedding table — the retrieval surface a curated
-# 100 TB corpus exposes (dedup/quality-filter first, then index ONLY
-# the shipped vectors; dead weight never enters the ANN tier).
+# the shipped doc_ids (queries/textmodel.corpus_survivor_ids, the
+# product's own decision chain) project directly onto the embedding
+# table — the retrieval surface a curated 100 TB corpus exposes
+# (dedup/quality-filter first, then index ONLY the shipped vectors;
+# dead weight never enters the ANN tier).
 # --------------------------------------------------------------------------
 
 _SURV_NQ = 5

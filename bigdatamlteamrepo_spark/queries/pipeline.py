@@ -257,6 +257,18 @@ def gopher_flag_exprs() -> dict[str, F.Column]:
     }
 
 
+def gopher_pass(flags: dict[str, F.Column] | None = None) -> F.Column:
+    """1 when a document passes every Gopher rule, else 0 (int).  Reads
+    the flag columns of :func:`gopher_rule_flags` by default; pass the
+    :func:`gopher_flag_exprs` dict to evaluate it inside a projection
+    that carries ``toks`` (the data card)."""
+    c = flags.__getitem__ if flags else F.col
+    return (
+        (c("f_words") + c("f_mwl") + c("f_alpha") + c("f_stop") + c("f_longword"))
+        == 0
+    ).cast("int")
+
+
 def gopher_rule_flags(docs: DataFrame, *extra_cols: str) -> DataFrame:
     """Per-document Gopher rule failure flags (0/1 ints) + token count
     ``n`` — row-local array expressions only; reused by the audit query
@@ -287,20 +299,7 @@ def doc_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("f_alpha").cast("bigint").alias("fail_alpha_frac"),
         F.sum("f_stop").cast("bigint").alias("fail_stopwords"),
         F.sum("f_longword").cast("bigint").alias("fail_long_word"),
-        F.sum(
-            (
-                (
-                    F.col("f_words")
-                    + F.col("f_mwl")
-                    + F.col("f_alpha")
-                    + F.col("f_stop")
-                    + F.col("f_longword")
-                )
-                == 0
-            ).cast("int")
-        )
-        .cast("bigint")
-        .alias("pass_all"),
+        F.sum(gopher_pass()).cast("bigint").alias("pass_all"),
     )
 
 

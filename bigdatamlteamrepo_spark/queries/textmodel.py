@@ -661,21 +661,14 @@ def training_corpus_selection(
     the second full corpus scan / tokenize / model build disappears.
     Standalone callers (the registry path) leave it None and pay the
     one rebuild."""
-    from bigdatamlteamrepo_spark.queries.pipeline import gopher_rule_flags
+    from bigdatamlteamrepo_spark.queries.pipeline import (
+        gopher_pass,
+        gopher_rule_flags,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     g = gopher_rule_flags(docs, "doc_id", "source").withColumn(
-        "pass_gopher",
-        (
-            (
-                F.col("f_words")
-                + F.col("f_mwl")
-                + F.col("f_alpha")
-                + F.col("f_stop")
-                + F.col("f_longword")
-            )
-            == 0
-        ).cast("int"),
+        "pass_gopher", gopher_pass()
     )
     if lm is None:
         lm = doc_lm_perplexity(spark, sf_dir)
@@ -792,75 +785,14 @@ GROUP BY d.source
 """
 
 
-def corpus_stage_frames(
-    spark: SparkSession, sf_dir: str
-) -> dict[str, DataFrame]:
-    """The corpus-build decision chain's per-stage doc_id presence sets
-    as PERSISTED frames: ``{"s1": gopher, "s2": exact-dedup keepers,
-    "s3": near-dup keepers, "sel": LM-selected}`` — the Spark twin of
-    :func:`_corpus_survivor_ctes`.  Callers own the lifecycle: consume,
-    materialize something small, then ``unpersist()`` each frame (the
-    operators/dedup.py discipline)."""
-    from bigdatamlteamrepo_spark.operators.graph import connected_components
-    from bigdatamlteamrepo_spark.queries.pipeline import gopher_rule_flags
-    from bigdatamlteamrepo_spark.queries.text_dedup import ngram_jaccard_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    flags = gopher_rule_flags(docs, "doc_id")
-    s1 = flags.filter(
-        (
-            F.col("f_words")
-            + F.col("f_mwl")
-            + F.col("f_alpha")
-            + F.col("f_stop")
-            + F.col("f_longword")
-        )
-        == 0
-    ).select("doc_id").persist()
-    s2 = (
-        docs.join(s1, "doc_id", "left_semi")
-        .groupBy("lang", F.md5("text").alias("__h"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-        .persist()
-    )
-    pairs = ngram_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    labels = connected_components(pairs, src="doc_a", dst="doc_b")
-    clustered = labels.select(F.col("node").alias("doc_id"))
-    reps = (
-        labels.join(
-            s2.select(F.col("doc_id").alias("node")), "node", "left_semi"
-        )
-        .groupBy("component")
-        .agg(F.min("node").alias("doc_id"))
-        .select("doc_id")
-    )
-    s3 = (
-        s2.join(clustered, "doc_id", "left_anti")
-        .unionByName(s2.join(reps, "doc_id", "left_semi"))
-        .persist()
-    )
-    lm = lm_perplexity_frame(
-        docs.join(s3, "doc_id", "left_semi").select("doc_id", "lang", "text")
-    ).select("doc_id", "ppl_tercile")
-    sel = (
-        s3.join(lm, "doc_id", "left")
-        .filter(F.coalesce(F.col("ppl_tercile"), F.lit(3)) <= 2)
-        .select("doc_id")
-        .persist()
-    )
-    return {"s1": s1, "s2": s2, "s3": s3, "sel": sel}
-
-
 def corpus_survivor_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The doc_ids the end-to-end build ships (``__csel`` in the oracle
-    CTEs), materialized small (one bigint column, corpus-shrunk) and
-    released from executor storage before returning."""
-    stages = corpus_stage_frames(spark, sf_dir)
-    out = truncate(stages["sel"])
-    for frame in stages.values():
-        frame.unpersist()
-    return out
+    CTEs): the product's own decision chain
+    (pipelines.corpus_dedup_stages → lm_select) with no optional stage,
+    projected to one bigint column of a lineage cut."""
+    from bigdatamlteamrepo_spark.pipelines import corpus_dedup_stages, lm_select
+
+    return lm_select(corpus_dedup_stages(spark, sf_dir)["s3"]).select("doc_id")
 
 
 @query("corpus_build_summary", oracle=_corpus_build_oracle())
@@ -873,24 +805,26 @@ def corpus_build_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     LM trained on the DEDUPED survivors, tercile ≤ 2) → shipped char
     mass.
 
-    Plan: every stage is a doc_id presence set glued by hash semi/anti
-    joins (built once in :func:`corpus_stage_frames`); the accounting
-    is ONE pass over documents with four presence-flag left joins and
-    a per-source conditional rollup — no stage is re-aggregated per
-    metric.  Stage frames are persisted while the (per-source-sized)
-    report materializes, then released (the operators/dedup.py
-    discipline).  At 100 TB each arrow keeps the scale shape its
-    registered per-stage query proves; the LM trains on survivors (the
-    CCNet caveat: training on raw duplicated text biases the
-    perplexity head toward boilerplate)."""
-    docs = load_table(spark, sf_dir, "documents")
-    stages = corpus_stage_frames(spark, sf_dir)
-    base = docs.select("doc_id", "source", "n_chars")
-    for name, frame in stages.items():
+    Plan: the stages are the product's own chain
+    (pipelines.corpus_dedup_stages → lm_select), each projected to a
+    doc_id presence set; the accounting is ONE pass over documents
+    with four presence-flag left joins and a per-source conditional
+    rollup — no stage is re-aggregated per metric.  At 100 TB each
+    arrow keeps the scale shape its registered per-stage query proves;
+    the LM trains on survivors (the CCNet caveat: training on raw
+    duplicated text biases the perplexity head toward boilerplate)."""
+    from bigdatamlteamrepo_spark.pipelines import corpus_dedup_stages, lm_select
+
+    stages = corpus_dedup_stages(spark, sf_dir)
+    stages["sel"] = lm_select(stages["s3"])
+    base = stages["docs"].select("doc_id", "source", "n_chars")
+    for name in ("s1", "s2", "s3", "sel"):
         base = base.join(
-            frame.withColumn(f"__{name}", F.lit(1)), "doc_id", "left"
+            stages[name].select("doc_id").withColumn(f"__{name}", F.lit(1)),
+            "doc_id",
+            "left",
         )
-    report = truncate(
+    return truncate(
         base.groupBy("source").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_input"),
             F.sum(F.coalesce("__s1", F.lit(0))).cast("bigint").alias("n_gopher"),
@@ -902,9 +836,6 @@ def corpus_build_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("chars_shipped"),
         )
     )
-    for frame in stages.values():
-        frame.unpersist()
-    return report
 
 
 def _incremental_ctes() -> str:
@@ -1167,7 +1098,10 @@ def batch_ingest_stages(
     (:func:`corpus_incremental_build_summary`) and the streaming
     foreachBatch ingest (streaming/ingest.py), so stream ≡ batch is
     testable against one implementation."""
-    from bigdatamlteamrepo_spark.queries.pipeline import gopher_rule_flags
+    from bigdatamlteamrepo_spark.queries.pipeline import (
+        gopher_pass,
+        gopher_rule_flags,
+    )
     from bigdatamlteamrepo_spark.queries.text_dedup import (
         _JACCARD_MIN,
         _pair_jaccard,
@@ -1176,20 +1110,7 @@ def batch_ingest_stages(
     )
 
     flags = gopher_rule_flags(batch, "doc_id")
-    s1 = (
-        flags.filter(
-            (
-                F.col("f_words")
-                + F.col("f_mwl")
-                + F.col("f_alpha")
-                + F.col("f_stop")
-                + F.col("f_longword")
-            )
-            == 0
-        )
-        .select("doc_id")
-        .persist()
-    )
+    s1 = flags.filter(gopher_pass() == 1).select("doc_id").persist()
 
     keys = batch.select("doc_id", "lang", F.md5("text").alias("__h"))
     s2 = (
@@ -1813,26 +1734,19 @@ def quality_ppl_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells).  At 100 TB nothing new shuffles: the join key is the same
     doc_id both frames are already keyed by, and the output is
     constant-sized."""
-    from bigdatamlteamrepo_spark.queries.pipeline import gopher_rule_flags
+    from bigdatamlteamrepo_spark.queries.pipeline import (
+        gopher_pass,
+        gopher_rule_flags,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
     flags = gopher_rule_flags(docs, "doc_id", "source", "n_chars")
-    pass_g = (
-        (
-            F.col("f_words")
-            + F.col("f_mwl")
-            + F.col("f_alpha")
-            + F.col("f_stop")
-            + F.col("f_longword")
-        )
-        == 0
-    ).cast("int")
     lm = lm_perplexity_frame(docs.select("doc_id", "lang", "text")).select(
         "doc_id", "ppl_tercile"
     )
     return (
         flags.select(
-            "doc_id", "source", "n_chars", pass_g.alias("pass_gopher")
+            "doc_id", "source", "n_chars", gopher_pass().alias("pass_gopher")
         )
         .join(lm, "doc_id", "left")
         .groupBy(

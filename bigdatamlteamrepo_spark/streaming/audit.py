@@ -34,7 +34,10 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gopher_audit_stream(docs_stream: DataFrame) -> DataFrame:
     """Per-source running Gopher audit of a document stream; reuses the
     batch rule expressions verbatim."""
-    from bigdatamlteamrepo_spark.queries.pipeline import gopher_rule_flags
+    from bigdatamlteamrepo_spark.queries.pipeline import (
+        gopher_pass,
+        gopher_rule_flags,
+    )
 
     r = gopher_rule_flags(docs_stream, "source")
     return r.groupBy("source").agg(
@@ -44,20 +47,7 @@ def gopher_audit_stream(docs_stream: DataFrame) -> DataFrame:
         F.sum("f_alpha").cast("bigint").alias("fail_alpha_frac"),
         F.sum("f_stop").cast("bigint").alias("fail_stopwords"),
         F.sum("f_longword").cast("bigint").alias("fail_long_word"),
-        F.sum(
-            (
-                (
-                    F.col("f_words")
-                    + F.col("f_mwl")
-                    + F.col("f_alpha")
-                    + F.col("f_stop")
-                    + F.col("f_longword")
-                )
-                == 0
-            ).cast("int")
-        )
-        .cast("bigint")
-        .alias("pass_all"),
+        F.sum(gopher_pass()).cast("bigint").alias("pass_all"),
     )
 
 
@@ -84,7 +74,10 @@ def datacard_running(docs: DataFrame, p: int = 6) -> DataFrame:
         hll_agg_exprs,
         hll_agg_finalize,
     )
-    from bigdatamlteamrepo_spark.queries.pipeline import gopher_rule_flags
+    from bigdatamlteamrepo_spark.queries.pipeline import (
+        gopher_pass,
+        gopher_rule_flags,
+    )
 
     toks = tokenize("text")
     pre = docs.select(
@@ -101,21 +94,11 @@ def datacard_running(docs: DataFrame, p: int = 6) -> DataFrame:
     flags = gopher_rule_flags(
         pre, "source", "n_chars", "__h", "__n_tokens", "__ttr"
     )
-    pass_g = (
-        (
-            F.col("f_words")
-            + F.col("f_mwl")
-            + F.col("f_alpha")
-            + F.col("f_stop")
-            + F.col("f_longword")
-        )
-        == 0
-    ).cast("int")
     regs = flags.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
         F.sum("__n_tokens").cast("bigint").alias("total_tokens"),
-        F.sum(pass_g).cast("bigint").alias("n_gopher_pass"),
+        F.sum(gopher_pass()).cast("bigint").alias("n_gopher_pass"),
         dsum("__ttr", 9).alias("__ttr_sum"),
         *hll_agg_exprs(F.col("__h"), p),
     )

@@ -9,13 +9,28 @@ from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.pipelines import build_training_corpus
 from bigdatamlteamrepo_spark.queries.shards import hash32
+from bigdatamlteamrepo_spark.queries.textmodel import _corpus_build_oracle
 
 
-def test_build_training_corpus_end_to_end(spark, sf_dir, tmp_path):
+def test_build_training_corpus_end_to_end(spark, sf_dir, duck, tmp_path):
     out = str(tmp_path / "shards")
     res = build_training_corpus(spark, sf_dir, out, n_shards=4)
     report = res["report"].collect()
     assert report, "empty report"
+
+    # the product's per-source accounting equals the independent DuckDB
+    # chain behind the corpus_build_summary face (same column order)
+    cols = [
+        "source",
+        "n_input",
+        "n_gopher",
+        "n_exact",
+        "n_neardup",
+        "n_selected",
+        "chars_shipped",
+    ]
+    oracle = sorted(duck.execute(_corpus_build_oracle()).fetchall())
+    assert [tuple(r[c] for c in cols) for r in report] == oracle
     for r in report:
         # stage survivors shrink monotonically
         assert (
@@ -239,17 +254,14 @@ def test_quality_stage_threshold_and_accounting(spark, sf_dir, tmp_path):
     # of s3 docs scoring >= the threshold under the same model.  (At
     # threshold 0.5 this may be ALL of them — the classifier was trained
     # to generalize the very rules the survivors already passed.)
-    from bigdatamlteamrepo_spark.queries.textmodel import corpus_stage_frames
+    from bigdatamlteamrepo_spark.pipelines import corpus_dedup_stages
 
-    stages = corpus_stage_frames(spark, sf_dir)
-    s3_docs = docs.join(stages["s3"], "doc_id", "left_semi")
+    s3_docs = corpus_dedup_stages(spark, sf_dir)["s3"]
     expected = (
         score_documents_expr(qm, s3_docs)
         .filter(F.col("quality_prob") >= 0.5)
         .count()
     )
-    for frame in stages.values():
-        frame.unpersist()
     assert sum(r["n_quality"] for r in report) == expected
 
     # every shipped doc scores >= the threshold under the same model
