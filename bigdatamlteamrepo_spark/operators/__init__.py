@@ -15,12 +15,11 @@ from bigdatamlteamrepo_spark.operators.dedup import (
 from bigdatamlteamrepo_spark.operators.sampling import (
     class_weights,
     random_split,
-    sample_approx,
     sample_exact_n,
     train_val_test_split,
     undersample_to_balance,
 )
-from bigdatamlteamrepo_spark.operators.similarity import ivf_topk, rp_lsh_topk
+from bigdatamlteamrepo_spark.operators.similarity import rp_lsh_topk
 from bigdatamlteamrepo_spark.operators.skew import salted_join
 
 __all__ = [
@@ -33,11 +32,9 @@ __all__ = [
     "simhash_neardup_pairs",
     "class_weights",
     "random_split",
-    "sample_approx",
     "sample_exact_n",
     "train_val_test_split",
     "undersample_to_balance",
-    "ivf_topk",
     "rp_lsh_topk",
     "salted_join",
 ]

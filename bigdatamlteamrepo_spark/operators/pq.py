@@ -104,8 +104,8 @@ def pq_codebooks_kmeans(
         ).persist()
         # a tiny corpus × tiny fraction can sample zero rows — MLlib
         # KMeans crashes on an empty fit; mirror the coarse-quantizer
-        # guard in build_ivfpq_index / ivf cell fit: fall back to the
-        # full frame, and clamp k to the fit-set size below.
+        # guard in build_ivfpq_index: fall back to the full frame, and
+        # clamp k to the fit-set size below.
         n_cap = cached.limit(k).count()
         if n_cap > 0:
             base = cached

@@ -13,9 +13,9 @@ two of these unseeded — everything here takes an explicit seed):
 
   * exact-n sampling has no native Spark op → ``orderBy(rand(seed)).
     limit(n)``.  This is a total sort: fine for the reference's 10k-row
-    use, but at 100 TB prefer :func:`sample_approx` (per-row Bernoulli,
-    no shuffle) unless exactness is required — the docstring of each
-    function states its shuffle cost.
+    use, but at 100 TB prefer ``DataFrame.sample(fraction, seed=…)``
+    (per-row Bernoulli, no shuffle) unless exactness is required — the
+    docstring of each function states its shuffle cost.
   * undersampling = per-class exact-n via a single window pass (one
     shuffle on the class key) rather than N filtered sorts.
   * class weights = broadcast join against the tiny count aggregate —
@@ -39,17 +39,13 @@ def sample_exact_n(df: DataFrame, n: int, seed: int | None = 42, by: Column | st
 
     Cost: total sort by rand — a full shuffle of the input.  Use for
     bounded outputs (the reference's 10k/5k fine-tune samples); at
-    cluster scale prefer :func:`sample_approx` when ±√n slack is fine.
+    cluster scale prefer a seeded ``DataFrame.sample`` (per-row
+    Bernoulli, no shuffle) when ±√n slack is fine.
     ``TakeOrderedAndProject`` keeps only n rows per partition then n
     overall, so memory stays bounded even though the sort is global.
     """
     rand = F.rand() if seed is None else F.rand(seed)
     return df.orderBy(rand).limit(n)
-
-
-def sample_approx(df: DataFrame, fraction: float, seed: int) -> DataFrame:
-    """Per-row Bernoulli sample (no shuffle) — the scale path."""
-    return df.sample(withReplacement=False, fraction=fraction, seed=seed)
 
 
 def random_split(df: DataFrame, weights: list[float], seed: int) -> list[DataFrame]:

@@ -1,7 +1,8 @@
 """Approximate nearest-neighbor search — the scale path beyond the
 brute-force cosine baseline (queries/similarity.py).
 
-Two variants, both UDF-free DataFrame plans:
+Every variant is a UDF-free DataFrame plan with an exact cosine re-rank
+of its candidates, and each backs a registered face:
 
   * **Random-hyperplane LSH** (:func:`rp_lsh_topk`): sign-bit sketch of
     the corpus against ``n_planes`` deterministic hyperplanes → bucket
@@ -10,10 +11,14 @@ Two variants, both UDF-free DataFrame plans:
     ``default_rng`` and embedded as plan literals (reproducible, no
     executor state) so the sketch is a pure column expression; at
     100 TB the corpus side is one scan + one shuffle on bucket keys.
-  * **IVF** (:func:`ivf_topk`): KMeans coarse quantizer (MLlib) →
-    probe the ``n_probe`` nearest centroids per query → exact re-rank
-    within probed cells.  The classic FAISS-style inverted-file layout,
-    expressed as two broadcast joins + a window.
+    :func:`rp_lsh_banded_topk` ORs ``n_bands`` shorter sketches to buy
+    recall that one 2^planes bucket cannot reach.
+  * **Voronoi cells** (:func:`voronoi_topk`): IVF-flat with data-defined
+    anchors — probe the ``n_probe`` nearest anchors, re-rank inside the
+    probed cells.  The trained IVF-PQ index lives in operators/pq.py.
+  * **Prefix re-rank** (:func:`prefix_rerank_topk`): Matryoshka-style
+    shortlist on the first ``prefix_dim`` components, then exact
+    full-dimension re-rank.
 """
 
 from __future__ import annotations
@@ -22,7 +27,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.functions.vectors import cosine_similarity, dot
-from bigdatamlteamrepo_spark.operators.checkpoint import truncate
 
 
 def hyperplane_values(dim: int, plane: int, seed: int) -> list[float]:
@@ -150,89 +154,6 @@ def rp_lsh_banded_topk(
     )
 
 
-def rp_multiprobe_buckets(
-    vec_col, dim: int, n_planes: int, n_flip: int, seed: int = 42
-):
-    """Query-side multi-probe bucket list (Lv et al., VLDB 2007): the
-    vector's own sign-sketch bucket plus the ``n_flip`` Hamming-1
-    neighbors obtained by flipping the LEAST-CONFIDENT planes — the ones
-    with the smallest |margin| = |v·h_p|, where a near-neighbor is most
-    likely to land on the other side.
-
-    Pure column expression: per-plane dots are computed once, margins
-    sorted with ``array_sort`` over (|margin|, plane) structs, and each
-    flip is ``bucket XOR 2^p``.  The buckets are distinct by
-    construction (distinct bits flipped), so the probe join needs no
-    pair dedup.  The corpus index (:func:`rp_signature`) is untouched —
-    recall is bought entirely at query time, the multi-probe trade.
-    """
-    dots = [dot(vec_col, _hyperplane(dim, p, seed)) for p in range(n_planes)]
-    bucket = None
-    for p, d in enumerate(dots):
-        bit = F.when(d >= 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
-        term = F.shiftleft(bit, p)
-        bucket = term if bucket is None else bucket.bitwiseOR(term)
-    margins = F.array(
-        *[
-            F.struct(F.abs(d).alias("m"), F.lit(p).cast("int").alias("p"))
-            for p, d in enumerate(dots)
-        ]
-    )
-    flip_planes = F.transform(
-        F.slice(F.array_sort(margins), 1, n_flip), lambda s: s["p"]
-    )
-    flipped = F.transform(
-        flip_planes,
-        lambda p: bucket.bitwiseXOR(F.pow(F.lit(2.0), p).cast("long")),
-    )
-    return F.concat(F.array(bucket), flipped)
-
-
-def rp_lsh_multiprobe_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    dim: int = 64,
-    n_planes: int = 8,
-    n_flip: int = 3,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = False,
-) -> DataFrame:
-    """Multi-probe RP-LSH top-k: each query probes 1 + ``n_flip``
-    buckets of the SAME single-sketch index that :func:`rp_lsh_topk`
-    uses.  Candidate volume grows ~(1+n_flip)×/query while the corpus
-    is still hashed exactly once — at 100 TB this beats re-banding the
-    corpus (``rp_lsh_banded_topk`` writes n_bands corpus rows) whenever
-    the query set is much smaller than the corpus.
-    """
-    corpus = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_emb"),
-        rp_signature(F.col(vec_col), dim, n_planes, seed).alias("bucket"),
-    )
-    q = queries.select(
-        "query_id",
-        "q_emb",
-        F.explode(
-            rp_multiprobe_buckets(F.col("q_emb"), dim, n_planes, n_flip, seed)
-        ).alias("bucket"),
-    )
-    sim = cosine_similarity(F.col("q_emb"), F.col("c_emb"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    joined = corpus.join(F.broadcast(q), "bucket")
-    if exclude_self:
-        joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    return (
-        joined.select("query_id", "neighbor_id", sim.alias("cosine_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def rp_signature(vec_col, dim: int, n_planes: int = 16, seed: int = 42):
     """Sign-bit LSH bucket id (long) for a vector column."""
     sig = None
@@ -302,91 +223,6 @@ def prefix_rerank_topk(
     )
 
 
-def write_prefix_sliced(
-    emb: DataFrame,
-    layout_dir: str,
-    prefix_dim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist embeddings DIM-SLICED for :func:`prefix_rerank_topk`:
-    one parquet table of (vec_id, pre, tail) where ``pre`` is the first
-    ``prefix_dim`` components and ``tail`` the rest.  Parquet column
-    chunks make the split real I/O: a stage-1 scan that selects only
-    ``(vec_id, pre)`` reads prefix_dim/dim of the vector bytes — the
-    claim ``prefix_rerank_topk_from_layout`` proves with a ReadSchema
-    plan check (tests/test_ann_dedup.py)."""
-    emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.slice(F.col(vec_col), 1, prefix_dim).alias("pre"),
-        F.expr(
-            f"slice({vec_col}, {prefix_dim + 1}, size({vec_col}) - {prefix_dim})"
-        ).alias("tail"),
-    ).write.mode("overwrite").parquet(layout_dir)
-
-
-def prefix_rerank_topk_from_layout(
-    spark,
-    layout_dir: str,
-    queries: DataFrame,
-    k: int = 10,
-    candidates: int = 50,
-    exclude_self: bool = False,
-) -> DataFrame:
-    """Two-stage ANN against the persisted dim-sliced layout
-    (:func:`write_prefix_sliced`): stage 1 scans ONLY ``(vec_id,
-    pre)`` — column pruning keeps tail bytes on disk; stage 2 fetches
-    full vectors for the shortlist with the candidate ids pushed into
-    the parquet scan as an IN filter (the id list is
-    |queries|×candidates — metadata-sized, the bounded-collect
-    convention of operators/pq.ivfpq_index_topk's probed cells).
-    Results are identical to the in-memory :func:`prefix_rerank_topk`
-    over pre||tail (pinned)."""
-    pre_tbl = spark.read.parquet(layout_dir).select("vec_id", "pre")
-    qs = queries.select("query_id", "q_emb")
-
-    # stage 1: prefix cosine over the pruned scan (prefix width comes
-    # from the layout itself — size("pre") — not a parameter)
-    joined = pre_tbl.crossJoin(F.broadcast(qs))
-    if exclude_self:
-        joined = joined.filter(F.col("vec_id") != F.col("query_id"))
-    pre_sim = cosine_similarity(
-        F.col("pre"), F.slice(F.col("q_emb"), 1, F.size("pre"))
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.desc("pre_sim"), F.asc("vec_id")
-    )
-    cand = truncate(  # reused: id-list collect + join
-        joined.select("query_id", "vec_id", pre_sim.alias("pre_sim"))
-        .withColumn("r", F.row_number().over(w1))
-        .filter(F.col("r") <= candidates)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    ids = [r.neighbor_id for r in cand.select("neighbor_id").distinct().collect()]
-
-    # stage 2: full vectors for shortlist rows only — IN-filter pushed
-    # to the scan, so only matching row groups read the tail column
-    full = (
-        spark.read.parquet(layout_dir)
-        .filter(F.col("vec_id").isin(ids))
-        .select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.concat("pre", "tail").alias("c_emb"),
-        )
-    )
-    sim = cosine_similarity(F.col("q_emb"), F.col("c_emb"))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        cand.join(full, "neighbor_id")
-        .join(F.broadcast(qs), "query_id")
-        .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
-        .withColumn("rank", F.row_number().over(w2).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def rp_lsh_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -441,8 +277,9 @@ def voronoi_topk(
     ties to the lower anchor id); queries probe the ``n_probe`` nearest
     anchors and re-rank exactly inside probed cells.
 
-    Unlike the KMeans quantizer (:func:`ivf_topk`), every step is a
-    deterministic expression over the data itself — no fitted model —
+    Unlike a fitted quantizer (the KMeans coarse cells of
+    operators/pq.build_ivfpq_index), every step is a deterministic
+    expression over the data itself — no fitted model —
     so the whole query is SQL-expressible and value-hash-checkable.
     Assignment is one scan with a broadcast anchor table (n_anchors×
     row expansion through the cross join, pruned back by the top-1
@@ -486,186 +323,5 @@ def voronoi_topk(
     return (
         joined.select("query_id", "neighbor_id", sim.alias("cosine_sim"))
         .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def build_ivf_index(
-    emb: DataFrame,
-    index_dir: str,
-    n_cells: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fit_sample_fraction: float | None = None,
-) -> None:
-    """Persist an IVF index: ``centroids/`` (cell, center) and
-    ``corpus/`` parquet PARTITIONED BY cell.
-
-    Build-once/query-many: the quantizer KMeans (fit on a sample at
-    scale) runs a single time; every later query batch reads ONLY its
-    probed ``cell=<k>/`` directories — at 1000 cells / 8 probes that is
-    0.8% of the corpus per query batch, enforced by partition pruning
-    rather than trust.  The FAISS inverted-file layout expressed as a
-    parquet layout.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    with_vec = emb.withColumn(
-        "__v", array_to_vector(F.col(vec_col).cast("array<double>"))
-    )
-    fit_set = (
-        with_vec.sample(False, fit_sample_fraction, seed=seed)
-        if fit_sample_fraction is not None
-        else with_vec
-    )
-    model = KMeans(k=n_cells, seed=seed, featuresCol="__v", predictionCol="cell").fit(
-        fit_set
-    )
-    centers = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    emb.sparkSession.createDataFrame(
-        centers, "cell int, center array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(index_dir + "/centroids")
-    (
-        model.transform(with_vec)
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_emb"),
-            "cell",
-        )
-        .repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(index_dir + "/corpus")
-    )
-
-
-def ivf_index_topk(
-    spark,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = 10,
-    n_probe: int = 4,
-    exclude_self: bool = False,
-) -> DataFrame:
-    """Top-k against a persisted IVF index (:func:`build_ivf_index`).
-
-    Probed cell ids are computed against the tiny centroid table and
-    collected driver-side (metadata-sized: ≤ n_probe × |queries| ints),
-    then pushed into the corpus scan as a static partition filter so
-    only probed ``cell=`` directories are listed and read.
-    """
-    centroids = spark.read.parquet(index_dir + "/centroids")
-    qc = queries.crossJoin(F.broadcast(centroids)).select(
-        "query_id",
-        "q_emb",
-        "cell",
-        cosine_similarity(
-            F.col("q_emb").cast("array<double>"), F.col("center")
-        ).alias("c_sim"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("c_sim"), F.asc("cell"))
-    probed = qc.withColumn("p", F.row_number().over(wq)).filter(
-        F.col("p") <= n_probe
-    )
-    cells = sorted({r.cell for r in probed.select("cell").distinct().collect()})
-
-    corpus = spark.read.parquet(index_dir + "/corpus").filter(
-        F.col("cell").isin(cells)
-    )
-    sim = cosine_similarity(F.col("q_emb"), F.col("c_emb"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    joined = corpus.join(
-        F.broadcast(probed.select("query_id", "q_emb", "cell")), "cell"
-    )
-    if exclude_self:
-        joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    return (
-        joined.select("query_id", "neighbor_id", sim.alias("cosine_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = False,
-    fit_sample_fraction: float | None = None,
-) -> DataFrame:
-    """IVF ANN: KMeans coarse cells, probe n_probe cells per query,
-    exact cosine re-rank inside probed cells.
-
-    The coarse quantizer only needs the rough shape of the distribution,
-    so at scale fit it on a sample (``fit_sample_fraction``) — a 100 TB
-    corpus must never be fed whole into an iterative KMeans; assignment
-    of the full corpus to the fitted cells stays a single scan either
-    way.  ``exclude_self`` as in :func:`rp_lsh_topk`.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    with_vec = emb.withColumn("__v", array_to_vector(F.col(vec_col).cast("array<double>")))
-    fit_set = (
-        with_vec.sample(withReplacement=False, fraction=fit_sample_fraction, seed=seed)
-        if fit_sample_fraction is not None
-        else with_vec
-    )
-    # KMeans refuses an empty fit, and a sampled fit set can be empty
-    # even on a non-empty corpus: fall back to the full corpus, and on
-    # a genuinely empty corpus return the empty top-k frame
-    n_fit = fit_set.count()
-    if n_fit == 0:
-        n_fit = with_vec.count()
-        if n_fit == 0:
-            id_t = emb.schema[id_col].dataType.simpleString()
-            q_t = queries.schema["query_id"].dataType.simpleString()
-            return emb.sparkSession.createDataFrame(
-                [],
-                f"query_id {q_t}, neighbor_id {id_t}, "
-                "cosine_sim double, rank int",
-            )
-        fit_set = with_vec
-    km = KMeans(
-        k=min(n_cells, n_fit), seed=seed, featuresCol="__v", predictionCol="cell"
-    )
-    model = km.fit(fit_set)
-    corpus = model.transform(with_vec).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_emb"), "cell"
-    )
-
-    centers = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    centers_df = emb.sparkSession.createDataFrame(centers, "cell int, center array<double>")
-
-    qc = queries.crossJoin(F.broadcast(centers_df)).select(
-        "query_id",
-        "q_emb",
-        "cell",
-        cosine_similarity(F.col("q_emb").cast("array<double>"), F.col("center")).alias("c_sim"),
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("c_sim"), F.asc("cell"))
-    probed = qc.withColumn("p", F.row_number().over(wq)).filter(F.col("p") <= n_probe)
-
-    sim = cosine_similarity(F.col("q_emb"), F.col("c_emb"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    joined = corpus.join(F.broadcast(probed.select("query_id", "q_emb", "cell")), "cell")
-    if exclude_self:
-        joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    return (
-        joined.select("query_id", "neighbor_id", sim.alias("cosine_sim"))
-        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )

@@ -188,6 +188,14 @@ def build_training_corpus(
     """
     from bigdatamlteamrepo_spark.sources.shard_writer import write_training_shards
 
+    # argument checks run before the first Spark job
+    if decon_mode not in ("drop", "cut"):
+        raise ValueError(f"decon_mode must be 'drop' or 'cut': {decon_mode!r}")
+    if quality_threshold is not None and quality_top_frac is not None:
+        raise ValueError(
+            "quality_threshold and quality_top_frac are mutually exclusive"
+        )
+
     stages = corpus_dedup_stages(spark, sf_dir)
     docs, s1, s2, s3, labels = (
         stages[k] for k in ("docs", "s1", "s2", "s3", "labels")
@@ -239,7 +247,7 @@ def build_training_corpus(
             s35 = checkpoint.truncate(
                 surgical_decontaminate(s3cut, ev_grams).drop("n_tokens_cut")
             )
-        elif decon_mode == "drop":
+        else:
             contaminated = (
                 s3cut.select("doc_id", F.explode(shingles(tokenize("text"), _DECON_W)).alias("gram"))
                 .join(F.broadcast(ev_grams), "gram")
@@ -249,8 +257,6 @@ def build_training_corpus(
             s35 = checkpoint.truncate(
                 s3cut.join(contaminated, "doc_id", "left_anti")
             )
-        else:
-            raise ValueError(f"decon_mode must be 'drop' or 'cut': {decon_mode!r}")
     else:
         s35 = s3cut
 
@@ -260,10 +266,6 @@ def build_training_corpus(
     # join + doc-keyed sum, codegen end to end) and keep by absolute
     # threshold or top-fraction quantile cut.  Trained on the RAW
     # corpus (see docstring: survivor-only labels are degenerate).
-    if quality_threshold is not None and quality_top_frac is not None:
-        raise ValueError(
-            "quality_threshold and quality_top_frac are mutually exclusive"
-        )
     if quality_threshold is not None or quality_top_frac is not None:
         from bigdatamlteamrepo_spark.ml.quality import (
             score_documents_expr,

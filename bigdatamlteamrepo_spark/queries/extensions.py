@@ -19,8 +19,7 @@ Near-dup tier design (the 100 TB story):
 
 ANN: the single-sketch and banded RP-LSH top-k faces are fully
 hash-checked (literal hyperplanes in both engines, cosine re-rank
-bit-exact).  The multi-probe and MLlib-KMeans IVF operators have no
-registered face; their recall-vs-exact bounds are asserted in pytest on
+bit-exact); their recall-vs-exact bounds are asserted in pytest on
 planted-cluster fixtures.
 """
 

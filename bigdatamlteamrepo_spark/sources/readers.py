@@ -61,9 +61,35 @@ METRICS_LOG_SCHEMA = T.StructType(
 )
 
 
+class CsvHeaderMismatch(ValueError):
+    """A pinned-schema column is absent from the CSV header."""
+
+
 def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """S1: header CSV with pinned schema (no inference pass)."""
-    return spark.read.csv(path, header=True, schema=schema)
+    """S1: header CSV with pinned schema (no inference pass).
+
+    Columns are matched to ``schema`` by header NAME, as the
+    reference's pandas readers do: handed a schema, Spark would bind
+    fields by position and only warn when the header disagrees, so a
+    file written in another column order (``MetricsCsvLogger`` writes
+    keys in first-seen order) would load silently shuffled.  The header
+    line is read once (no type inference); header columns the schema
+    does not name are read as strings and dropped.  Raises
+    :class:`CsvHeaderMismatch` when a schema column is missing.
+    """
+    header = spark.read.csv(path, header=True).columns
+    missing = [f.name for f in schema.fields if f.name not in header]
+    if missing:
+        raise CsvHeaderMismatch(
+            f"{path}: header {header} lacks schema column(s) {missing}"
+        )
+    by_name = {f.name: f for f in schema.fields}
+    file_schema = T.StructType(
+        [by_name.get(c, T.StructField(c, T.StringType())) for c in header]
+    )
+    return spark.read.csv(path, header=True, schema=file_schema).select(
+        *schema.fieldNames()
+    )
 
 
 def read_multiline_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:

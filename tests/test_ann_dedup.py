@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.operators.dedup import simhash_neardup_pairs
 from bigdatamlteamrepo_spark.operators.similarity import (
-    ivf_topk,
     rp_lsh_banded_topk,
     rp_lsh_topk,
 )
@@ -86,64 +85,6 @@ def test_rp_lsh_banded_recall(spark, clustered_emb):
     assert _recall(approx, exact) >= 0.9
 
 
-def test_rp_lsh_multiprobe_recall(spark, clustered_emb):
-    """Probing Hamming-1 buckets of the SAME index must not lose
-    candidates vs the single-bucket sketch, and at the fixture's scale
-    reaches the banded recall bar without re-hashing the corpus."""
-    from bigdatamlteamrepo_spark.operators.similarity import rp_lsh_multiprobe_topk
-
-    exact = _brute_topk(spark, clustered_emb).collect()
-    q = clustered_emb.filter(F.col("vec_id") < 6).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    single = rp_lsh_topk(
-        clustered_emb, q, k=10, dim=32, n_planes=4, seed=42, exclude_self=True
-    ).collect()
-    multi = rp_lsh_multiprobe_topk(
-        clustered_emb, q, k=10, dim=32, n_planes=4, n_flip=2, seed=42,
-        exclude_self=True,
-    ).collect()
-    assert _recall(multi, exact) >= _recall(single, exact)
-    assert _recall(multi, exact) >= 0.9
-    # no duplicate (query, neighbor) pairs from the probe join
-    seen = [(r.query_id, r.neighbor_id) for r in multi]
-    assert len(seen) == len(set(seen))
-
-
-def test_multiprobe_buckets_distinct_and_sized(spark, clustered_emb):
-    from bigdatamlteamrepo_spark.operators.similarity import rp_multiprobe_buckets
-
-    rows = (
-        clustered_emb.limit(20)
-        .select(
-            rp_multiprobe_buckets(
-                F.col("embedding"), dim=32, n_planes=8, n_flip=3
-            ).alias("probes")
-        )
-        .collect()
-    )
-    for r in rows:
-        assert len(r.probes) == 4
-        assert len(set(r.probes)) == 4
-        for b in r.probes:
-            assert 0 <= b < 2**8
-        # every probe is within Hamming distance 1 of the home bucket
-        home = r.probes[0]
-        for b in r.probes[1:]:
-            assert bin(home ^ b).count("1") == 1
-
-
-def test_ivf_recall(spark, clustered_emb):
-    exact = _brute_topk(spark, clustered_emb).collect()
-    q = clustered_emb.filter(F.col("vec_id") < 6).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    approx = ivf_topk(
-        clustered_emb, q, k=10, n_cells=6, n_probe=2, seed=42, exclude_self=True
-    ).collect()
-    assert _recall(approx, exact) >= 0.9
-
-
 def test_simhash_on_documents(spark, sf_dir):
     from bigdatamlteamrepo_spark.catalog import load_table
 
@@ -168,59 +109,6 @@ def test_simhash_identical_texts_hamming_zero(spark):
     )
     pairs = {(r.doc_a, r.doc_b): r.hamming for r in simhash_neardup_pairs(df, max_hamming=7).collect()}
     assert pairs.get((0, 1)) == 0
-
-
-def test_ivf_persisted_index_prunes_and_recalls(spark, clustered_emb, tmp_path):
-    """Build-once/query-many: persisted index must (a) match the recall
-    bar, (b) read only probed cell directories (partition pruning)."""
-    from bigdatamlteamrepo_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_index_topk,
-    )
-
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(clustered_emb, idx, n_cells=6, seed=42)
-
-    exact = _brute_topk(spark, clustered_emb).collect()
-    q = clustered_emb.filter(F.col("vec_id") < 6).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    res = ivf_index_topk(spark, idx, q, k=10, n_probe=2, exclude_self=True)
-    assert _recall(res.collect(), exact) >= 0.9
-
-    # pruning: the scan touches at most n_probe * n_queries distinct cells
-    touched = {
-        f.split("cell=")[1].split("/")[0]
-        for f in res.inputFiles()
-        if "cell=" in f
-    }
-    import glob
-
-    all_cells = {
-        d.split("cell=")[1] for d in glob.glob(f"{idx}/corpus/cell=*")
-    }
-    assert touched < all_cells or len(all_cells) <= 2 * 6  # strict subset
-    assert len(touched) <= 2 * 6
-
-
-def test_ivf_persisted_matches_inmemory(spark, clustered_emb, tmp_path):
-    from bigdatamlteamrepo_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_index_topk,
-    )
-
-    idx = str(tmp_path / "ivf2")
-    build_ivf_index(clustered_emb, idx, n_cells=6, seed=42)
-    q = clustered_emb.filter(F.col("vec_id") < 6).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    mem = ivf_topk(
-        clustered_emb, q, k=10, n_cells=6, n_probe=2, seed=42, exclude_self=True
-    )
-    per = ivf_index_topk(spark, idx, q, k=10, n_probe=2, exclude_self=True)
-    a = {(r.query_id, r.neighbor_id, r.rank) for r in mem.collect()}
-    b = {(r.query_id, r.neighbor_id, r.rank) for r in per.collect()}
-    assert a == b
 
 
 # --------------------------------------------------------------------------
@@ -330,40 +218,3 @@ def test_prefix_rerank_recall(spark, clustered_emb):
     assert {(r.query_id, r.neighbor_id) for r in full} == {
         (r.query_id, r.neighbor_id) for r in exact
     }
-
-
-def test_prefix_rerank_from_layout_prunes_and_matches(spark, clustered_emb, tmp_path):
-    """The dim-sliced persisted layout: stage 1's scan must read ONLY
-    (vec_id, pre) — the ¼-scan-bytes claim as a ReadSchema fact — the
-    stage-2 scan must carry the pushed IN filter, and results must
-    equal the in-memory operator."""
-    from bigdatamlteamrepo_spark.operators.similarity import (
-        prefix_rerank_topk,
-        prefix_rerank_topk_from_layout,
-        write_prefix_sliced,
-    )
-    from bigdatamlteamrepo_spark.plans import checks
-
-    layout = str(tmp_path / "sliced")
-    write_prefix_sliced(clustered_emb, layout, prefix_dim=16)
-    q = clustered_emb.filter(F.col("vec_id") < 6).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    got = prefix_rerank_topk_from_layout(
-        spark, layout, q, k=10, candidates=30, exclude_self=True
-    )
-    want = prefix_rerank_topk(
-        clustered_emb, q, k=10, prefix_dim=16, candidates=30, exclude_self=True
-    )
-    assert sorted(
-        (r.query_id, r.neighbor_id, r.rank) for r in got.collect()
-    ) == sorted((r.query_id, r.neighbor_id, r.rank) for r in want.collect())
-
-    # stage-1 column pruning: the pre-only scan never reads tail
-    pre_scan = spark.read.parquet(layout).select("vec_id", "pre")
-    assert set(checks.reads_columns(pre_scan)) == {"vec_id", "pre"}
-    # the executed plan of the full operator reads tail only behind
-    # the pushed id filter
-    plan = checks.physical_plan(got)
-    assert "pre" in plan
-    assert "CartesianProduct" not in plan

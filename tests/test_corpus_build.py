@@ -292,9 +292,17 @@ def test_quality_stage_top_fraction(spark, sf_dir, tmp_path):
         assert r["n_decontam"] >= r["n_quality"] >= r["n_selected"], r
 
 
-def test_quality_stage_mutually_exclusive_knobs(spark, sf_dir, tmp_path):
+def test_quality_stage_mutually_exclusive_knobs(spark, sf_dir, tmp_path, monkeypatch):
+    """Bad arguments fail before any Spark work: the first corpus stage
+    function is replaced by one that raises, so reaching it fails the test."""
     import pytest
 
+    from bigdatamlteamrepo_spark import pipelines
+
+    def _no_spark_work(*a, **kw):
+        raise AssertionError("argument check ran after the dedup stages")
+
+    monkeypatch.setattr(pipelines, "corpus_dedup_stages", _no_spark_work)
     with pytest.raises(ValueError, match="mutually exclusive"):
         build_training_corpus(
             spark,
@@ -303,6 +311,9 @@ def test_quality_stage_mutually_exclusive_knobs(spark, sf_dir, tmp_path):
             quality_threshold=0.5,
             quality_top_frac=0.5,
         )
+    # a decon_mode typo is rejected even with no eval set given
+    with pytest.raises(ValueError, match="decon_mode"):
+        build_training_corpus(spark, sf_dir, str(tmp_path / "dx"), decon_mode="cutt")
 
 
 def test_assign_splits_is_leakage_safe_and_gate_stable(spark, sf_dir, tmp_path):

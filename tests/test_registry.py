@@ -77,56 +77,213 @@ def _faces(tree: ast.Module) -> list[str]:
     return out
 
 
-def _called_names(trees) -> set[str]:
-    """Names of every called function (``f(...)`` / ``m.f(...)``),
-    with ``from … import f as g`` aliases resolved back to ``f``."""
-    names: set[str] = set()
-    for tree in trees:
-        alias = {
-            a.asname: a.name
-            for node in ast.walk(tree)
-            if isinstance(node, ast.ImportFrom)
-            for a in node.names
-            if a.asname
-        }
-        for node in ast.walk(tree):
-            if not isinstance(node, ast.Call):
-                continue
-            if isinstance(node.func, ast.Name):
-                names.add(alias.get(node.func.id, node.func.id))
-            elif isinstance(node.func, ast.Attribute):
-                names.add(node.func.attr)
-    return names
+def _refs(tree: ast.Module) -> dict[str, set[str]]:
+    """The one reference walker behind both reachability guards: for
+    each top-level function or class, the names its body refers to
+    (``f`` / ``m.f``, calls or not); module-level code, decorators
+    included, is keyed ``""``.  ``from … import f as g`` aliases resolve
+    back to ``f``.  Import statements, docstrings and comments are not
+    references."""
+    alias = {
+        a.asname: a.name
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)
+        for a in node.names
+        if a.asname
+    }
+
+    def names(nodes) -> set[str]:
+        out: set[str] = set()
+        for top in nodes:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name):
+                    out.add(alias.get(node.id, node.id))
+                elif isinstance(node, ast.Attribute):
+                    out.add(node.attr)
+        return out
+
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    refs: dict[str, set[str]] = {"": set()}
+    for node in tree.body:
+        if isinstance(node, defs):
+            refs[""] |= names(node.decorator_list)
+            body = [n for n in ast.iter_child_nodes(node) if n not in node.decorator_list]
+            refs[node.name] = names(body)
+        else:
+            refs[""] |= names([node])
+    return refs
 
 
 def _dead_faces(face_trees, all_trees, is_registered) -> list[str]:
-    called = _called_names(all_trees)
+    referenced = set().union(*(r for t in all_trees for r in _refs(t).values()))
     return [
         f"{mod}.{name}"
         for mod, tree in face_trees
         for name in _faces(tree)
-        if not is_registered(mod, name) and name not in called
+        if not is_registered(mod, name) and name not in referenced
     ]
+
+
+def _unreached(trees: dict[str, ast.Module], roots) -> list[str]:
+    """Public top-level functions and classes of ``trees`` (dotted module
+    name → AST) that no root reaches.  The roots are every module's
+    module-level code plus the ``(module, name)`` pairs in ``roots``; a
+    reached definition reaches every top-level definition, in any
+    module, whose name it refers to."""
+    refs = {mod: _refs(t) for mod, t in trees.items()}
+    homes: dict[str, list[str]] = {}
+    for mod, r in refs.items():
+        for name in r:
+            homes.setdefault(name, []).append(mod)
+    reached: set[tuple[str, str]] = set()
+    todo = [(mod, "") for mod in trees] + list(roots)
+    while todo:
+        mod, name = todo.pop()
+        if (mod, name) in reached or name not in refs.get(mod, {}):
+            continue
+        reached.add((mod, name))
+        for ref in refs[mod][name]:
+            todo += [(m, ref) for m in homes.get(ref, ())]
+    return sorted(
+        f"{mod}.{name}"
+        for mod, r in refs.items()
+        for name in r
+        if name and not name.startswith("_") and (mod, name) not in reached
+    )
+
+
+def _package_trees() -> dict[str, ast.Module]:
+    """Dotted module name → AST for every module of the package."""
+    trees = {}
+    for p in sorted(PKG.rglob("*.py")):
+        parts = p.relative_to(PKG.parent).with_suffix("").parts
+        mod = ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+        trees[mod] = ast.parse(p.read_text(), filename=str(p))
+    return trees
 
 
 def test_every_query_face_is_registered_or_called():
     """A public ``(spark, sf_dir)`` function in ``queries/`` is a query
-    face: it must be registered or called somewhere in the package.
+    face: it must be registered or referenced somewhere in the package.
     A deregistered face kept "callable" is a path nothing runs."""
     from bigdatamlteamrepo_spark.queries import QUERIES
 
     registered = set(QUERIES.values())
-    trees = {
-        p: ast.parse(p.read_text(), filename=str(p)) for p in sorted(PKG.rglob("*.py"))
-    }
-    face_trees = [(p.stem, t) for p, t in trees.items() if p.parent == PKG / "queries"]
+    trees = _package_trees()
+    face_trees = [
+        (mod, t) for mod, t in trees.items() if mod.rpartition(".")[0] == f"{PKG.name}.queries"
+    ]
 
     def is_registered(mod: str, name: str) -> bool:
-        fn = getattr(importlib.import_module(f"{PKG.name}.queries.{mod}"), name)
-        return fn in registered
+        return getattr(importlib.import_module(mod), name) in registered
 
     dead = _dead_faces(face_trees, trees.values(), is_registered)
     assert not dead, "register or delete these query faces: " + ", ".join(dead)
+
+
+#: Public package names that no root reaches but stay, each with its
+#: reason.  A key (relative to the package) is a module — every public
+#: name in it — or one function or class.
+KEPT_UNREACHED = {
+    "catalog.load_tables": "package-level export that loads several catalog tables at once",
+    "operators.bucketing": "bucketed co-location writes and joins; test_bucketing proves the Exchange-free plan",
+    "operators.merge": "MERGE / CDC upsert API with partition-scoped rewrites (test_merge)",
+    "operators.pii.redact_pii": "PII scrubbing text transform beside the registered PII counts (test_pii)",
+    "operators.pq.build_ivfpq_index": "builds the persisted IVF-PQ index that streaming/vectors appends into",
+    "operators.pq.ivfpq_index_topk": "probes that persisted IVF-PQ index, streaming increments included",
+    "operators.pq.pq_codebooks_kmeans": "sampled-KMeans codebooks build_ivfpq_index trains by default",
+    "operators.pq.read_index_part": "reads an IVF-PQ index table across its base and streaming/vectors increments",
+    "operators.pq.semdedup_from_index": "SemDeDup over the persisted IVF-PQ cells (COVERAGE 'ANN-candidate SemDeDup')",
+    "operators.retrieval": "materialized inverted index whose layout streaming/index keeps up to date",
+    "operators.sampling.random_split": "R2: the reference's seeded fractional split",
+    "operators.sampling.stratified_sample": "R4 scale path: per-stratum Bernoulli sampling without a shuffle",
+    "operators.sampling.train_val_test_split": "R3: the reference's three-way train/val/test split",
+    "operators.setjoin.brute_force_jaccard_join": "O(n²) reference implementation the set-join losslessness test compares against",
+    "operators.skew": "salted join, the skew-mitigation operator (test_skew)",
+    "operators.stats.whitening_transform": "ZCA whitening (COVERAGE 'ZCA whitening')",
+    "plans.checks": "plan-inspection helpers behind the tests' plan gates",
+    "queries.cdc.compact_log": "one CDC compaction function for batch and stream (test_streaming_cdc)",
+    "queries.passages.window_hashes": "stride-1 window hashes the substring-dedup tests and tools/substring_scaling.py read",
+    "queries.shards.shard_of": "the shard-id rule written shards are checked against (test_shard_writer)",
+    "queries.text_dedup.bbit_independent_prefilter": "kept by the SCALING.md r08 b-bit decision",
+    "queries.text_dedup.ngram_jaccard_pairs_exact": "brute-force reference implementation for the LSH recall tests",
+    "sources.codecs.resize_rgb": "box-average resize that sources/multimodal.resize_images_real applies",
+    "sources.codecs.ulaw_compress": "µ-law encoder, the inverse the codec round trip pins ulaw_expand against",
+    "sources.corpusgen": "Python DataSource for generated corpora that tests and tools/ scaling scripts register",
+    "sources.layout.compact_parquet": "small-file compaction of a parquet table (COVERAGE 'Parquet compaction')",
+    "sources.layout.write_zordered": "Z-order clustered writes (COVERAGE 'Z-order clustered writes')",
+    "sources.multimodal.resize_images": "metadata-only resize stub (payload unchanged) that test_multimodal pins",
+    "sources.multimodal.resize_images_real": "decode → resize → re-encode of real image bytes (test_codecs)",
+    "sources.readers": "pinned-schema source readers (S1–S3, S6): the ingest API; S6 is tested through read_metrics_log",
+    "sources.shard_writer.read_training_shard": "reads one written training shard back, pruned to its directory",
+    "stagecache": "stub whose counters perfbench/run.py reads; goes with ROADMAP item 6",
+}
+
+
+def _reachability_roots(trees) -> set[tuple[str, str]]:
+    """The registered faces, the product, the session factory and the
+    public names of ``streaming/`` and ``ml/`` (the product's API)."""
+    from bigdatamlteamrepo_spark.queries import QUERIES
+
+    roots = {(fn.__module__, fn.__name__) for fn in QUERIES.values()}
+    roots |= {
+        (f"{PKG.name}.pipelines", "build_training_corpus"),
+        (f"{PKG.name}.session", "get_spark"),
+    }
+    for mod, tree in trees.items():
+        if mod.split(".")[1:2] in (["streaming"], ["ml"]):
+            roots |= {(mod, n) for n in _refs(tree) if n and not n.startswith("_")}
+    return roots
+
+
+def test_every_public_name_is_reached_or_kept():
+    """Every public top-level function and class of the package is
+    reached from a root (:func:`_reachability_roots`; module-level code
+    counts too) or named in :data:`KEPT_UNREACHED` with its reason.  A
+    keep entry that covers nothing any more must go."""
+    trees = _package_trees()
+    unreached = [q.split(".", 1)[1] for q in _unreached(trees, _reachability_roots(trees))]
+
+    def entry(rel: str) -> str | None:
+        mod = rel.rpartition(".")[0]
+        return rel if rel in KEPT_UNREACHED else mod if mod in KEPT_UNREACHED else None
+
+    dead = [rel for rel in unreached if entry(rel) is None]
+    assert not dead, "reach, keep (with a reason) or delete: " + ", ".join(dead)
+    stale = sorted(set(KEPT_UNREACHED) - {entry(rel) for rel in unreached})
+    assert not stale, "these keep entries cover no unreached name: " + ", ".join(stale)
+
+
+def test_reachability_follows_refs_from_roots():
+    src = '''
+from m import kept as _k
+
+def root():
+    helper()
+    _k()
+
+def helper():
+    """dead() in a docstring"""
+    # dead() in a comment
+    return obj.method_of_c
+
+def kept(): ...
+def dead(): ...
+def only_dead_calls_me(): ...
+def dead_caller():
+    only_dead_calls_me()
+
+class C:
+    def method_of_c(self):
+        return from_method()
+
+def from_method(): ...
+def from_module_level(): ...
+
+VALUE = from_module_level
+'''
+    unreached = _unreached({"m": ast.parse(src)}, {("m", "root")})
+    assert unreached == ["m.C", "m.dead", "m.dead_caller", "m.from_method", "m.only_dead_calls_me"]
 
 
 def test_dead_face_guard_sees_calls_not_text():

@@ -152,6 +152,7 @@ def test_metrics_csv_feeds_metrics_log_module(spark, tmp_path):
     """The logger's file is directly consumable by the M22 queries
     (ml/metrics_log.py) — the end-to-end metrics-log contract."""
     from bigdatamlteamrepo_spark.ml import metrics_log
+    from bigdatamlteamrepo_spark.sources import readers
 
     lg = tt.MetricsCsvLogger(str(tmp_path))
     lg.log_metrics({"train_loss": 3.0}, step=10, epoch=0)
@@ -159,9 +160,17 @@ def test_metrics_csv_feeds_metrics_log_module(spark, tmp_path):
     lg.log_metrics({"train_loss": 1.5}, step=30, epoch=1)
     lg.log_metrics({"val_loss": 1.8}, step=30, epoch=1)
     path = lg.save()
-    df = spark.read.option("header", True).csv(
-        path, inferSchema=True
-    )
+    # the logger's header order (train_loss,epoch,step,val_loss) differs
+    # from the reader's schema order: columns must bind by name
+    df = readers.read_metrics_log(spark, path)
+    assert df.columns == ["step", "epoch", "train_loss", "val_loss"]
+    rows = [tuple(r) for r in df.collect()]
+    assert len(rows) == 4 and set(rows) == {
+        (10, 0, 3.0, None),
+        (15, 0, None, 2.5),
+        (30, 1, 1.5, None),
+        (30, 1, None, 1.8),
+    }
     best = metrics_log.best_epoch(df).collect()
     assert len(best) == 1 and best[0].epoch == 1
     assert abs(best[0].mean_val_loss - 1.8) < 1e-9
