@@ -93,15 +93,6 @@ def undersample_to_balance(
     )
 
 
-def stratified_sample(
-    df: DataFrame, strata_col: str, fractions: dict, seed: int = 42
-) -> DataFrame:
-    """Per-stratum Bernoulli sampling (``sampleBy`` — the scale-path
-    alternative to undersampling noted in SURVEY R4): no shuffle, one
-    pass, approximate per-stratum counts."""
-    return df.sampleBy(strata_col, fractions=fractions, seed=seed)
-
-
 def class_weights(df: DataFrame, label_col: str, weight_col: str = "classWeightCol") -> DataFrame:
     """Attach ``weight = majority_count / class_count`` per row (R5).
 

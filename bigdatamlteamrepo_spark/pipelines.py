@@ -32,15 +32,19 @@ The always-on decision chain (Gopher → exact → near-dup, then LM
 selection) is :func:`corpus_dedup_stages` plus :func:`lm_select`; the
 registered accounting faces (queries/textmodel.corpus_build_summary,
 corpus_survivor_ids) call the same two functions, so they count
-exactly what the product ships.
+exactly what the product ships.  The per-source report is
+:func:`stage_report`, which the product and corpus_build_summary
+share: one union of the stage frames and one conditional rollup.
 
 At 100 TB each arrow is the same plan the registered query proves at
-driver SFs; the only additions here are left-semi joins gluing stage
-survivors together (hash joins on doc_id) and one final
-repartition-by-shard write.
+driver SFs.  The Gopher gate is a row-local filter; the later stages
+glue their survivors together with left-semi/anti joins on doc_id,
+and the build ends in one repartition-by-shard write.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,9 +71,11 @@ def corpus_dedup_stages(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame
     docs = load_table(spark, sf_dir, "documents")
 
     # ---- stage 1: Gopher quality gate (row-local flags, one scan)
-    flags = gopher_rule_flags(docs, "doc_id")
-    gopher_ids = flags.filter(gopher_pass() == 1).select("doc_id")
-    s1 = docs.join(gopher_ids, "doc_id", "left_semi")
+    s1 = (
+        gopher_rule_flags(docs, *docs.columns)
+        .filter(gopher_pass() == 1)
+        .select(*docs.columns)
+    )
 
     # ---- stage 2: exact dedup — keep the min doc_id per (lang, md5)
     exact_keep = (
@@ -123,6 +129,27 @@ def lm_select(frame: DataFrame, lm: DataFrame | None = None) -> DataFrame:
         lm = lm_perplexity_frame(frame.select("doc_id", "lang", "text"))
     keep_lm = lm.filter(F.col("ppl_tercile") <= 2).select("doc_id")
     return checkpoint.truncate(frame.join(keep_lm, "doc_id", "left_semi"))
+
+
+def stage_report(stages: dict[str, DataFrame]) -> DataFrame:
+    """Per-source stage accounting in one rollup.  ``stages`` maps each
+    report column to its document frame, in funnel order; the result
+    is ``source``, one document count per entry and ``chars_shipped``
+    (the ``n_chars`` sum of the last entry).  The frames' ``(source,
+    n_chars)`` projections are unioned with their stage index and
+    counted by one conditional ``groupBy`` — no join, so a stage that
+    lost every document of a source counts 0."""
+    frames = [
+        df.select("source", "n_chars", F.lit(i).alias("stage"))
+        for i, df in enumerate(stages.values())
+    ]
+    stage, last = F.col("stage"), len(frames) - 1
+    return reduce(DataFrame.unionAll, frames).groupBy("source").agg(
+        *[F.count(F.when(stage == i, 1)).alias(n) for i, n in enumerate(stages)],
+        F.sum(F.when(stage == last, F.col("n_chars")).otherwise(0))
+        .cast("bigint")
+        .alias("chars_shipped"),
+    )
 
 
 def build_training_corpus(
@@ -291,6 +318,15 @@ def build_training_corpus(
     # trained on the survivors of every earlier stage by default
     selected = lm_select(s375, lm)
 
+    # ---- per-source stage accounting (before split labels: the
+    # shipped set is the same, and every counted frame is a scan or a
+    # lineage cut)
+    funnel = dict(n_input=docs, n_gopher=s1, n_exact=s2, n_neardup=s3, n_decontam=s35)
+    if s375 is not s35:
+        funnel["n_quality"] = s375
+    funnel["n_selected"] = selected
+    report = stage_report(funnel).orderBy("source")
+
     # ---- stage 4.5 (optional): leakage-safe split labels — every
     # shipped doc carries train/val/test hashed on its near-dup-cluster
     # representative (queries/pipeline.leakage_safe_split_summary), so
@@ -322,29 +358,4 @@ def build_training_corpus(
         split_col="split" if assign_splits else None,
     )
 
-    # ---- per-source stage accounting
-    def stage_counts(df: DataFrame, name: str) -> DataFrame:
-        return df.groupBy("source").agg(F.count(F.lit(1)).alias(name))
-
-    report = (
-        stage_counts(docs, "n_input")
-        .join(stage_counts(s1, "n_gopher"), "source", "left")
-        .join(stage_counts(s2, "n_exact"), "source", "left")
-        .join(stage_counts(s3, "n_neardup"), "source", "left")
-        .join(stage_counts(s35, "n_decontam"), "source", "left")
-    )
-    if s375 is not s35:
-        report = report.join(stage_counts(s375, "n_quality"), "source", "left")
-    report = (
-        report.join(stage_counts(selected, "n_selected"), "source", "left")
-        .join(
-            selected.groupBy("source").agg(
-                F.sum("n_chars").cast("bigint").alias("chars_shipped")
-            ),
-            "source",
-            "left",
-        )
-        .na.fill(0)
-        .orderBy("source")
-    )
     return {"report": report, "manifest": manifest, "selected": selected}

@@ -806,34 +806,29 @@ def corpus_build_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass.
 
     Plan: the stages are the product's own chain
-    (pipelines.corpus_dedup_stages → lm_select), each projected to a
-    doc_id presence set; the accounting is ONE pass over documents
-    with four presence-flag left joins and a per-source conditional
-    rollup — no stage is re-aggregated per metric.  At 100 TB each
-    arrow keeps the scale shape its registered per-stage query proves;
-    the LM trains on survivors (the CCNet caveat: training on raw
-    duplicated text biases the perplexity head toward boilerplate)."""
-    from bigdatamlteamrepo_spark.pipelines import corpus_dedup_stages, lm_select
+    (pipelines.corpus_dedup_stages → lm_select), counted by the
+    product's own accounting (pipelines.stage_report: one union of the
+    stage frames and one per-source conditional rollup, no join).  At
+    100 TB each arrow keeps the scale shape its registered per-stage
+    query proves; the LM trains on survivors (the CCNet caveat:
+    training on raw duplicated text biases the perplexity head toward
+    boilerplate)."""
+    from bigdatamlteamrepo_spark.pipelines import (
+        corpus_dedup_stages,
+        lm_select,
+        stage_report,
+    )
 
     stages = corpus_dedup_stages(spark, sf_dir)
-    stages["sel"] = lm_select(stages["s3"])
-    base = stages["docs"].select("doc_id", "source", "n_chars")
-    for name in ("s1", "s2", "s3", "sel"):
-        base = base.join(
-            stages[name].select("doc_id").withColumn(f"__{name}", F.lit(1)),
-            "doc_id",
-            "left",
-        )
     return truncate(
-        base.groupBy("source").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_input"),
-            F.sum(F.coalesce("__s1", F.lit(0))).cast("bigint").alias("n_gopher"),
-            F.sum(F.coalesce("__s2", F.lit(0))).cast("bigint").alias("n_exact"),
-            F.sum(F.coalesce("__s3", F.lit(0))).cast("bigint").alias("n_neardup"),
-            F.sum(F.coalesce("__sel", F.lit(0))).cast("bigint").alias("n_selected"),
-            F.sum(F.when(F.col("__sel") == 1, F.col("n_chars")).otherwise(0))
-            .cast("bigint")
-            .alias("chars_shipped"),
+        stage_report(
+            {
+                "n_input": stages["docs"],
+                "n_gopher": stages["s1"],
+                "n_exact": stages["s2"],
+                "n_neardup": stages["s3"],
+                "n_selected": lm_select(stages["s3"]),
+            }
         )
     )
 

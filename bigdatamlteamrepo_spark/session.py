@@ -73,6 +73,13 @@ def get_spark(
     conf.setdefault("spark.ui.enabled", "false")
     if extra_conf:
         conf.update(extra_conf)
+    if master and master.startswith("local"):
+        # Python workers import the package (pandas UDFs, mapInPandas)
+        # from wherever the driver was started: put its parent dir on
+        # their path, ahead of any path already configured.
+        pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(p for p in (pkg_parent, conf.get(key)) if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

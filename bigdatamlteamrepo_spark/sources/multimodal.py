@@ -96,7 +96,7 @@ def generate_media(spark: SparkSession, n_rows: int = 300, seed: int = 42) -> Da
 
 
 # ---------------------------------------------------------------------------
-# Decode / feature-extract / resize / frame-sample as mapInPandas stages
+# Decode / feature-extract / frame-sample as mapInPandas stages
 # ---------------------------------------------------------------------------
 
 
@@ -145,26 +145,6 @@ def extract_features(df: DataFrame) -> DataFrame:
 
 
 RESIZE_SCHEMA = "media_id long, width int, height int, payload binary"
-
-
-def resize_images(df: DataFrame, max_side: int = 256) -> DataFrame:
-    """Image resize stage: recomputes metadata exactly; payload transform
-    is the stub (real impl: PIL thumbnail).  Non-images pass through
-    untouched upstream — filter before calling."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            scale = (max_side / pdf[["width", "height"]].max(axis=1)).clip(upper=1.0)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": (pdf["width"] * scale).round().astype("int32"),
-                    "height": (pdf["height"] * scale).round().astype("int32"),
-                    "payload": pdf["payload"],  # STUB: bytes unchanged
-                }
-            )
-
-    return df.filter(F.col("kind") == "image").mapInPandas(op, schema=RESIZE_SCHEMA)
 
 
 FRAMES_SCHEMA = "media_id long, frame_idx int, frame_ts_ms int"
@@ -337,7 +317,7 @@ def decode_media_exact_stats(df: DataFrame) -> DataFrame:
     return df.mapInPandas(op, schema=EXACT_STATS_SCHEMA)
 
 
-def resize_images_real(df: DataFrame, max_side: int = 64) -> DataFrame:
+def resize_images(df: DataFrame, max_side: int = 64) -> DataFrame:
     """Decode → box-average downscale → re-encode, all real bytes; the
     output metadata comes from the resized array's actual shape."""
     from bigdatamlteamrepo_spark.sources.codecs import (

@@ -98,11 +98,11 @@ def test_decode_stats_partitioning_invariant(spark):
 def test_resize_images_real_reencodes(spark):
     from bigdatamlteamrepo_spark.sources.multimodal import (
         generate_decodable_media,
-        resize_images_real,
+        resize_images,
     )
 
     media = generate_decodable_media(spark, n_rows=20, seed=9)
-    out = resize_images_real(media, max_side=40).collect()
+    out = resize_images(media, max_side=40).collect()
     assert out
     for r in out:
         rgb = decode_ppm(bytes(r.payload))
@@ -172,13 +172,13 @@ def test_decode_image_dispatch():
 
 
 def test_png_media_resize_real(spark):
-    """resize_images_real over PNG payloads: decode dispatch + box
+    """resize_images over PNG payloads: decode dispatch + box
     downscale + re-encode on real compressed bytes."""
     from bigdatamlteamrepo_spark.sources import multimodal as mm
     from bigdatamlteamrepo_spark.sources.codecs import decode_ppm
 
     media = mm.generate_png_media(spark, n_rows=20, seed=42)
-    out = {r.media_id: r for r in mm.resize_images_real(media, max_side=16).collect()}
+    out = {r.media_id: r for r in mm.resize_images(media, max_side=16).collect()}
     assert len(out) == 20
     for mid, r in out.items():
         assert max(r.width, r.height) <= 16

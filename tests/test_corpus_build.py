@@ -5,6 +5,8 @@ value-checks individually."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.pipelines import build_training_corpus
@@ -31,6 +33,12 @@ def test_build_training_corpus_end_to_end(spark, sf_dir, duck, tmp_path):
     ]
     oracle = sorted(duck.execute(_corpus_build_oracle()).fetchall())
     assert [tuple(r[c] for c in cols) for r in report] == oracle
+    # the report is one rollup over the stage frames: no join, and the
+    # only scans of the documents table are the input and the Gopher
+    # filter (every later stage is a lineage cut)
+    plan = res["report"]._jdf.queryExecution().optimizedPlan().toString()
+    assert not re.search(r"\bJoin\b", plan), plan
+    assert len(re.findall(r"Relation \[[^\]]*\] parquet", plan)) <= 2, plan
     for r in report:
         # stage survivors shrink monotonically
         assert (

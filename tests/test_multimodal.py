@@ -1,7 +1,12 @@
 """Multimodal plumbing tests: schema, batch shapes, determinism,
-metadata-only pruning (the decode itself is a documented stub)."""
+metadata-only pruning, and the Python workers' import path.  Real
+decode and resize (``resize_images``) are tested in test_codecs."""
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,20 +43,6 @@ def test_extract_features_shapes(media):
     again = {r.media_id: r.features for r in mm.extract_features(media).collect()}
     for r in rows:
         assert again[r.media_id] == r.features
-
-
-def test_resize_images(media):
-    resized = mm.resize_images(media, max_side=256).collect()
-    originals = {r.media_id: r for r in media.filter(F.col("kind") == "image").collect()}
-    assert len(resized) == len(originals)
-    for r in resized:
-        o = originals[r.media_id]
-        assert max(r.width, r.height) <= 256
-        # aspect ratio preserved within integer rounding
-        if o.width >= o.height:
-            assert r.width == min(256, o.width)
-        # payload untouched by the stub
-        assert bytes(r.payload) == bytes(o.payload)
 
 
 def test_sample_frames(media):
@@ -225,3 +216,31 @@ def test_image_phash_neardup_pairs_finds_planted_dups(spark):
         ).collect()
     }
     assert again == got
+
+
+def test_pandas_udf_face_runs_outside_the_repo_root(tmp_path):
+    """A session from ``get_spark`` puts the package on the Python
+    workers' path: a mapInPandas face runs from another directory with
+    the package only on the driver's ``sys.path`` and no PYTHONPATH."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {root!r})
+from bigdatamlteamrepo_spark import get_spark
+from bigdatamlteamrepo_spark.queries import QUERIES
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+print("ROWS", QUERIES["multimodal_decode_summary"](spark, "unused").count())
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ROWS 2" in out.stdout

@@ -196,7 +196,6 @@ KEPT_UNREACHED = {
     "operators.pq.semdedup_from_index": "SemDeDup over the persisted IVF-PQ cells (COVERAGE 'ANN-candidate SemDeDup')",
     "operators.retrieval": "materialized inverted index whose layout streaming/index keeps up to date",
     "operators.sampling.random_split": "R2: the reference's seeded fractional split",
-    "operators.sampling.stratified_sample": "R4 scale path: per-stratum Bernoulli sampling without a shuffle",
     "operators.sampling.train_val_test_split": "R3: the reference's three-way train/val/test split",
     "operators.setjoin.brute_force_jaccard_join": "O(n²) reference implementation the set-join losslessness test compares against",
     "operators.skew": "salted join, the skew-mitigation operator (test_skew)",
@@ -207,13 +206,12 @@ KEPT_UNREACHED = {
     "queries.shards.shard_of": "the shard-id rule written shards are checked against (test_shard_writer)",
     "queries.text_dedup.bbit_independent_prefilter": "kept by the SCALING.md r08 b-bit decision",
     "queries.text_dedup.ngram_jaccard_pairs_exact": "brute-force reference implementation for the LSH recall tests",
-    "sources.codecs.resize_rgb": "box-average resize that sources/multimodal.resize_images_real applies",
+    "sources.codecs.resize_rgb": "box-average resize that sources/multimodal.resize_images applies",
     "sources.codecs.ulaw_compress": "µ-law encoder, the inverse the codec round trip pins ulaw_expand against",
     "sources.corpusgen": "Python DataSource for generated corpora that tests and tools/ scaling scripts register",
     "sources.layout.compact_parquet": "small-file compaction of a parquet table (COVERAGE 'Parquet compaction')",
     "sources.layout.write_zordered": "Z-order clustered writes (COVERAGE 'Z-order clustered writes')",
-    "sources.multimodal.resize_images": "metadata-only resize stub (payload unchanged) that test_multimodal pins",
-    "sources.multimodal.resize_images_real": "decode → resize → re-encode of real image bytes (test_codecs)",
+    "sources.multimodal.resize_images": "decode → resize → re-encode of real image bytes (test_codecs)",
     "sources.readers": "pinned-schema source readers (S1–S3, S6): the ingest API; S6 is tested through read_metrics_log",
     "sources.shard_writer.read_training_shard": "reads one written training shard back, pruned to its directory",
     "stagecache": "stub whose counters perfbench/run.py reads; goes with ROADMAP item 6",

@@ -1,11 +1,10 @@
-"""Resample/forward-fill + stratified sampling structural tests."""
+"""Resample/forward-fill structural tests."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from bigdatamlteamrepo_spark.catalog import load_table
-from bigdatamlteamrepo_spark.operators.sampling import stratified_sample
 from bigdatamlteamrepo_spark.operators.timeseries import resample_ffill
 
 
@@ -37,26 +36,3 @@ def test_resample_grid_is_dense_and_filled(spark, sf_dir):
     obs = out.filter(F.col("is_observed")).count()
     assert obs > 0
     out.unpersist()
-
-
-def test_stratified_sample_fractions(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    fractions = {"view": 0.5, "click": 0.1}
-    s = stratified_sample(ev, "event_type", fractions, seed=42)
-    # only requested strata appear
-    kinds = {r.event_type for r in s.select("event_type").distinct().collect()}
-    assert kinds <= set(fractions)
-    # approximate proportions (Bernoulli, generous bounds)
-    base = {
-        r.event_type: r.n
-        for r in ev.groupBy("event_type").agg(F.count("*").alias("n")).collect()
-    }
-    got = {
-        r.event_type: r.n
-        for r in s.groupBy("event_type").agg(F.count("*").alias("n")).collect()
-    }
-    for k, frac in fractions.items():
-        assert abs(got.get(k, 0) / base[k] - frac) < 0.15
-    # deterministic under fixed seed
-    again = stratified_sample(ev, "event_type", fractions, seed=42).count()
-    assert again == s.count()

@@ -94,7 +94,7 @@ def main() -> None:
     #: round-6 additions: curation/sketch/capstone tier — ANN semdedup
     #: (anchor cross-join collapsed by max_by hash-agg), quantile sketch
     #: (O(k)-row windows), b-bit estimator (signature equi-joins), and
-    #: the end-to-end corpus-build accounting (presence-flag left joins)
+    #: the end-to-end corpus-build accounting (one join-free rollup)
     #: round-12 addition: the interval-overlap face (binned equi-join,
     #: no nested-loop)
     R12_SET = [
